@@ -37,6 +37,12 @@ FILES_PER_TABLE = 8
 # engine and the oracle disagree on such a URL's host, so those seeds are
 # left out of the inputs (a known engine/oracle divergence, not measured)
 DOUBLE_PORT = r"://[^/]*:\d+:\d+"
+# The host population (robots rules, politeness budgets) is part of the
+# workload, not of the seed: with per-seed robots rules the share of
+# denied hosts moved the URLs a round handles by 13% (IQR/median over ten
+# seeds), against 4% with one fixed table. ``--seed`` varies the seed URLs
+# and the docs.
+HOSTS_SEED = 0
 
 _DOCS_ARROW = pa.schema([
     pa.field("doc_id", pa.string(), nullable=False),
@@ -100,8 +106,8 @@ def generate(wl, seed: int) -> dict:
     return {
         "seeds": seeds[~seeds["url"].str.contains(DOUBLE_PORT)],
         "docs": gen_docs(n=wl.n_docs, seed=seed),
-        "robots": gen_robots_rules(seed=seed),
-        "politeness": gen_politeness(seed=seed),
+        "robots": gen_robots_rules(seed=HOSTS_SEED),
+        "politeness": gen_politeness(seed=HOSTS_SEED),
     }
 
 
@@ -139,7 +145,8 @@ def load_or_build(cache_dir: str, wl, seed: int) -> Fixture:
     from ``cache_dir``. A half-written entry (no digests file) is rebuilt."""
     root = os.path.join(
         cache_dir,
-        f"{wl.name}-{wl.n_seeds}x{wl.n_docs}-{wl.round_ms}ms-{wl.committed_rounds}r-seed{seed}",
+        f"{wl.name}-{wl.n_seeds}x{wl.n_docs}-{wl.round_ms}ms-{wl.committed_rounds}r"
+        f"-hosts{HOSTS_SEED}-seed{seed}",
     )
     meta = os.path.join(root, "digests.json")
     if os.path.isfile(meta):

@@ -80,6 +80,8 @@ PER_LAYER = {
     "session.bootstrap_s": "s",
     "session.resume_round_s": "s",
     "session.maintain_s": "s",
+    "session.round_s": "s",
+    "session.urls_per_s": "1/s",
     "session.peak_rss_mb": "MiB",
     "trace.round_s": "s",
     "trace.overhead_s": "s",
@@ -368,6 +370,8 @@ class Tracer:
         v["tablestore.parts.fetched"] = round0["parts"][cr.FETCHED]
         for name in ("bootstrap", "resume_round", "maintain"):
             v[f"session.{name}_s"] = session.steps[name].wall_s
+        v["session.round_s"] = session.per_round("wall_s")
+        v["session.urls_per_s"] = session.urls_per("wall_s")
         v["session.peak_rss_mb"] = peak_rss_mb
         v["trace.round_s"] = step.wall_s
         v["trace.overhead_s"] = self.overhead_s

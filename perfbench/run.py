@@ -30,9 +30,12 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
-# Times are CPU seconds of the process tree (driver, JVM, Python workers),
-# not wall time: on a shared host, CPU steal by other tenants moved wall
-# times of identical runs by 2x, which no bound could absorb.
+# Times are CPU seconds of the process tree (this process, its JVM, the
+# JVM's Python daemon and workers): they do not count the time other
+# tenants of a shared host take the CPUs away, which moved the wall times
+# of identical runs by 19-35% (IQR/median). Wall times are logged on
+# stderr and reported by the traced run (``session.round_s``,
+# ``session.urls_per_s``), ungated.
 END_TO_END = {
     "round_cpu_s": "s",
     "urls_per_cpu_s": "1/s",
@@ -41,10 +44,12 @@ END_TO_END = {
     "write_bytes_per_round": "bytes",
     "setup_s": "s",
 }
-# the session's steps that commit a round
-ROUND_STEPS = ("round0", "resume_round")
-SETUP_REPS = 3
 DRIVER_MEMORY = "2g"
+# C1 only: a run's JVM lives about a minute, too short for C2 to pay back
+# its compile threads. On a 4-core host they took 40% of a session's CPU
+# (147 s with C2, 87 s without) and a fifth of a run's wall time, work that
+# says nothing about the engine.
+JIT_OPTIONS = "-XX:TieredStopAtLevel=1"
 
 
 def _log(msg: str) -> None:
@@ -85,7 +90,9 @@ def _start_spark(work: str):
         cores=cores,
         extra_conf={
             "spark.driver.memory": DRIVER_MEMORY,
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}",
+            "spark.driver.extraJavaOptions": (
+                f"-Djava.io.tmpdir={os.path.join(work, 'tmp')} {JIT_OPTIONS}"
+            ),
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         },
     )
@@ -116,21 +123,12 @@ def _stop_spark(spark) -> None:
 
 def _end_to_end(sessions, setup_s: float) -> dict:
     med = statistics.median
-
-    def per_round(s, key):
-        return statistics.fmean(getattr(s.steps[r], key) for r in ROUND_STEPS)
-
-    def urls_per_cpu_s(s):
-        steps = [s.steps[r] for r in ROUND_STEPS]
-        urls = sum(st.result["emitted"] + st.result["new_links"] for st in steps)
-        return urls / sum(st.cpu_s for st in steps)
-
     values = {
-        "round_cpu_s": med(s.steps["round0"].cpu_s for s in sessions),
-        "urls_per_cpu_s": med(urls_per_cpu_s(s) for s in sessions),
+        "round_cpu_s": med(s.per_round("cpu_s") for s in sessions),
+        "urls_per_cpu_s": med(s.urls_per("cpu_s") for s in sessions),
         "session_cpu_s": med(s.cpu_s for s in sessions),
-        "shuffle_bytes_per_round": med(per_round(s, "shuffle_bytes") for s in sessions),
-        "write_bytes_per_round": med(per_round(s, "write_bytes") for s in sessions),
+        "shuffle_bytes_per_round": med(s.per_round("shuffle_bytes") for s in sessions),
+        "write_bytes_per_round": med(s.per_round("write_bytes") for s in sessions),
         "setup_s": setup_s,
     }
     return {k: {"value": v, "unit": END_TO_END[k]} for k, v in values.items()}
@@ -148,7 +146,7 @@ def main(argv=None) -> int:
         return 2
 
     import fixtures
-    from sparkstats import StageLedger, tree_cpu_s, tree_peak_rss_mb
+    from sparkstats import StageLedger, describe_tree, tree_cpu_s, tree_peak_rss_mb
     from workloads import WORKLOADS, engine_tables, load_inputs, oracle_mismatches, run_session
 
     wl = WORKLOADS.get(args.workload)
@@ -166,16 +164,11 @@ def main(argv=None) -> int:
     tracer = None
     try:
         ledger = StageLedger(spark)
-        start_wall, start_cpu = time.perf_counter() - t0, tree_cpu_s() - cpu0
-        reps = []
-        for _ in range(SETUP_REPS):
-            cpu = tree_cpu_s()
-            shutil.rmtree(store_root, ignore_errors=True)
-            inputs = load_inputs(spark, fx)
-            reps.append(tree_cpu_s() - cpu)
-        setup_s = start_cpu + statistics.median(reps)
-        _log(f"session start {start_wall:.1f} s wall/{start_cpu:.1f} s cpu, "
-             "set-up reps " + ", ".join(f"{r:.2f}" for r in reps) + " s cpu")
+        shutil.rmtree(store_root, ignore_errors=True)
+        inputs = load_inputs(spark, fx)
+        setup_s = tree_cpu_s() - cpu0
+        _log(f"set-up {time.perf_counter() - t0:.1f} s wall/{setup_s:.1f} s cpu; "
+             f"counted {describe_tree()}")
 
         if args.trace:
             import layers
@@ -191,9 +184,11 @@ def main(argv=None) -> int:
             s = run_session(spark, wl, inputs, store_root, ledger,
                             tag=f"s{len(sessions)}", tracer=tracer)
             attempted += len(s.steps) + 1  # engine calls + the oracle check
-            _log(", ".join(f"{k} {v.wall_s:.2f} s wall/{v.cpu_s:.2f} s cpu/{v.jobs} jobs"
+            _log(", ".join(f"{k} {v.wall_s:.2f} s wall/{v.cpu_s:.2f} s cpu/"
+                           f"{v.steal_s:.2f} s stolen/{v.jobs} jobs"
                            for k, v in s.steps.items())
-                 + f"; session {s.wall_s:.2f} s wall/{s.cpu_s:.2f} s cpu")
+                 + f"; session {s.wall_s:.2f} s wall/{s.cpu_s:.2f} s cpu; "
+                 f"counted {describe_tree()}")
             if tracer is not None:
                 tracer.uninstall()  # the check's reads are not part of a round
             bad = oracle_mismatches(engine_tables(s.engine), fx.digests)
@@ -204,8 +199,7 @@ def main(argv=None) -> int:
             if tracer is not None:
                 break  # one traced session is the per-layer sample
         if tracer is not None:
-            metrics = tracer.metrics(
-                sessions[0], tree_peak_rss_mb(spark.sparkContext._gateway.proc.pid))
+            metrics = tracer.metrics(sessions[0], tree_peak_rss_mb())
         else:
             metrics = _end_to_end(sessions, setup_s)
     finally:

@@ -55,12 +55,61 @@ class StageLedger:
         return out
 
 
-def _children(pid: int) -> list[int]:
+_TICK = os.sysconf("SC_CLK_TCK")
+
+
+def _stat(pid: int) -> tuple[int, int] | None:
+    """(ppid, CPU ticks) of ``pid``: its utime + stime plus those of the
+    children it has reaped (a Python worker that exited is billed to the
+    daemon that waited for it)."""
     try:
-        with open(f"/proc/{pid}/task/{pid}/children") as f:
-            return [int(p) for p in f.read().split()]
+        with open(f"/proc/{pid}/stat") as f:
+            fields = f.read().rsplit(")", 1)[1].split()
     except OSError:
-        return []
+        return None
+    return int(fields[1]), sum(int(x) for x in fields[11:15])
+
+
+def process_tree(root_pid: int | None = None) -> dict[int, int]:
+    """CPU ticks of every live process in the tree rooted at ``root_pid``
+    (default: this process), keyed by pid.
+
+    The tree is built from the ppid of every process in /proc, not from
+    /proc/<pid>/task/<pid>/children: that file lists only the children
+    forked by the thread whose tid is the pid, and the JVM starts the
+    pyspark daemon from an executor thread."""
+    kids: dict[int, list[int]] = {}
+    ticks: dict[int, int] = {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        st = _stat(int(name))
+        if st is not None:
+            kids.setdefault(st[0], []).append(int(name))
+            ticks[int(name)] = st[1]
+    root = root_pid or os.getpid()
+    out, stack = {}, [root]
+    while stack:
+        pid = stack.pop()
+        if pid in ticks:
+            out[pid] = ticks[pid]
+        stack.extend(kids.get(pid, ()))
+    return out
+
+
+def tree_cpu_s(root_pid: int | None = None) -> float:
+    """CPU seconds used so far by the process tree rooted at ``root_pid``
+    (default: this process) — this process, its JVM, and the JVM's Python
+    daemon and workers. Unlike wall time this excludes time the host took
+    the CPUs away (steal)."""
+    return sum(process_tree(root_pid).values()) / _TICK
+
+
+def host_steal_s() -> float:
+    """CPU seconds the hypervisor has taken from this machine's CPUs since
+    boot (the steal column of /proc/stat, summed over CPUs)."""
+    with open("/proc/stat") as f:
+        return int(f.readline().split()[8]) / _TICK
 
 
 def _hwm_kib(pid: int) -> int:
@@ -74,42 +123,27 @@ def _hwm_kib(pid: int) -> int:
     return 0
 
 
-def tree_peak_rss_mb(root_pid: int) -> float:
+def tree_peak_rss_mb(root_pid: int | None = None) -> float:
     """Sum of each live process's peak resident set (VmHWM) over the tree
-    rooted at ``root_pid`` — the driver JVM with its Python daemon and
-    workers."""
-    total, stack = 0, [root_pid]
-    while stack:
-        pid = stack.pop()
-        total += _hwm_kib(pid)
-        stack.extend(_children(pid))
-    return total / 1024.0
+    rooted at ``root_pid`` — this process, its JVM, and the JVM's Python
+    daemon and workers."""
+    return sum(_hwm_kib(pid) for pid in process_tree(root_pid)) / 1024.0
 
 
-_TICK = os.sysconf("SC_CLK_TCK")
-
-
-def _cpu_ticks(pid: int) -> int:
-    """utime + stime of ``pid`` plus those of its reaped children."""
-    try:
-        with open(f"/proc/{pid}/stat") as f:
-            fields = f.read().rsplit(")", 1)[1].split()
-    except OSError:
-        return 0
-    return sum(int(x) for x in fields[11:15])
-
-
-def tree_cpu_s(root_pid: int | None = None) -> float:
-    """CPU seconds used so far by the process tree rooted at ``root_pid``
-    (default: this process) — the driver, its JVM, and the JVM's Python
-    daemon and workers. Unlike wall time this excludes time the host took
-    the CPUs away (steal), which on a shared host swamps run-to-run noise."""
-    total, stack = 0, [root_pid or os.getpid()]
-    while stack:
-        pid = stack.pop()
-        total += _cpu_ticks(pid)
-        stack.extend(_children(pid))
-    return total / _TICK
+def describe_tree(root_pid: int | None = None) -> str:
+    """One line naming every process of the tree, for the run log."""
+    names = []
+    for pid in sorted(process_tree(root_pid)):
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                argv = f.read().split(b"\0")
+        except OSError:
+            continue
+        cmd = os.path.basename(argv[0].decode(errors="replace"))
+        if b"pyspark.daemon" in argv or b"pyspark.worker" in argv:
+            cmd += " pyspark.daemon/worker"
+        names.append(f"{pid}:{cmd}")
+    return f"{len(names)} processes: " + ", ".join(names)
 
 
 def dir_bytes(path: str) -> int:

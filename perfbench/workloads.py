@@ -29,11 +29,13 @@ from delphi_crawler_spark.plans.crawl_round import (
 )
 
 from fixtures import Fixture, pending_digest, schedule_digest, seen_digest
-from sparkstats import StageLedger, dir_bytes, tree_cpu_s
+from sparkstats import StageLedger, dir_bytes, host_steal_s, tree_cpu_s
 
 
 # rounds 0..KILLED_ROUND-1 run normally; round KILLED_ROUND is killed and resumed
 KILLED_ROUND = 1
+# the session's steps that commit a round
+ROUND_STEPS = ("round0", "resume_round")
 
 
 @dataclass(frozen=True)
@@ -51,7 +53,10 @@ class Workload:
 WORKLOADS = {
     wl.name: wl
     for wl in (
-        # pending >> admitted (~3k of ~35k), seen >> candidates
+        # pending >> admitted (~3k of ~35k), seen >> candidates; 2 s rounds,
+        # not CrawlConfig's 10 s: a 10 s round would admit ~11k, a quarter
+        # of this frontier, and a frontier ten times larger does not fit
+        # the run's time budget
         Workload("steady_state", n_seeds=40_000, n_docs=20_000, round_ms=2_000),
         # every round admits the whole frontier
         Workload("young_crawl", n_seeds=4_000, n_docs=4_000, round_ms=600_000),
@@ -88,6 +93,7 @@ class Step:
     task_s: float
     shuffle_bytes: int
     write_bytes: int
+    steal_s: float
     result: object = None
 
 
@@ -98,21 +104,33 @@ class Session:
     wall_s: float = 0.0
     cpu_s: float = 0.0
 
+    def per_round(self, key: str) -> float:
+        """Mean of a ``Step`` field over the rounds the session commits."""
+        return sum(getattr(self.steps[r], key) for r in ROUND_STEPS) / len(ROUND_STEPS)
+
+    def urls_per(self, key: str) -> float:
+        """URLs those rounds handled (emitted + new links) per second of
+        ``key`` (``wall_s`` or ``cpu_s``)."""
+        steps = [self.steps[r] for r in ROUND_STEPS]
+        urls = sum(st.result["emitted"] + st.result["new_links"] for st in steps)
+        return urls / sum(getattr(st, key) for st in steps)
+
 
 def _timed(ledger: StageLedger, store_root: str, group: str, fn) -> Step:
     before = dir_bytes(store_root)
     ledger.set_group(group)
-    cpu = tree_cpu_s()
+    cpu, steal = tree_cpu_s(), host_steal_s()
     t = time.perf_counter()
     try:
         out = fn()
     finally:
         wall = time.perf_counter() - t
         cpu = tree_cpu_s() - cpu
+        steal = host_steal_s() - steal
         ledger.clear_group()
     st = ledger.collect(group)
     return Step(wall, cpu, st.jobs, st.task_s, st.shuffle_write_bytes,
-                dir_bytes(store_root) - before, out)
+                dir_bytes(store_root) - before, steal, out)
 
 
 def _kill_after_fetched_append(engine: CrawlEngine) -> None:
