@@ -1,19 +1,11 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line
+"""Operator benchmark harness: per-query wall time at $SPARK_GRAFT_SF_DIR
+on local[$SPARK_GRAFT_CPUS]; prints ONE JSON line
 ``{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}``.
 
-The headline metric is the BASELINE.json one — frontier throughput (URLs
-scheduled+deduped/sec) — measured by ``crawl_schedule``: a synthetic
-frontier generated *inside Spark* (spark.range → url expressions; zero
-driver-side data movement) pushed through the full scheduling core:
-canonicalize (Arrow UDF) → key derivation → F1 windowed dedup → bloom-
-prefiltered seen anti-join → politeness token-bucket slots → exact emission
-order. Every query is forced through the noop sink so projections (UDFs
-included) actually execute.
-
-Scaling evidence (north rule, two-cluster-size criterion): run this same
-script with SPARK_GRAFT_CPUS=8 and =32 on the same input; tools/scaling_report.py
-automates that and writes the efficiency table.
+Every query is forced through the noop sink so projections (UDFs included)
+actually execute. The crawl engine's own benchmark — whole
+``CrawlEngine.run_round`` sessions with per-layer traces — is
+``perfbench/run.py``.
 """
 
 from __future__ import annotations
@@ -69,11 +61,11 @@ _STEADY: dict = {}
 
 def _steady_seen(spark: SparkSession):
     """The previous rounds' artifacts: the committed seen-side frontier and
-    its incrementally-maintained bloom. In the engine these persist across
-    rounds (TableStore parts + checkpointed bloom words, OR-updated with one
+    its incrementally-maintained bloom. In the engine these carry across
+    rounds (TableStore parts + the in-memory bloom, OR-updated with one
     O(round) segment per round — plans/crawl_round.py), so a steady-state
     round never rebuilds them; the bench mirrors that by building them once
-    per process. Their build/maintenance costs are benched separately
+    per process. Their maintenance cost is benched separately
     (``bloom_incremental_update``)."""
     from delphi_crawler_spark.functions.canonicalize import canonicalize_url
     from delphi_crawler_spark.operators.seen import build_bloom
@@ -91,39 +83,6 @@ def _steady_seen(spark: SparkSession):
         _STEADY["seen"] = seen
         _STEADY["bloom"] = build_bloom(seen, expected_items=FRONTIER_N // 7, fpp=0.01)
     return _STEADY["seen"], _STEADY["bloom"]
-
-
-def crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The frontier scheduling core at benchmark volume (the headline):
-    one steady-state round — canonicalize (Arrow fast path) → key
-    derivation → F1 hash-agg dedup → bloom-prefiltered seen anti-join →
-    politeness token-bucket slots → exact emission order."""
-    from delphi_crawler_spark.functions.canonicalize import canonicalize_url, with_url_keys
-    from delphi_crawler_spark.operators.dedup import first_occurrence_dedup
-    from delphi_crawler_spark.operators.politeness import assign_emission_slots, emission_order
-    from delphi_crawler_spark.operators.seen import seen_anti_join
-
-    raw = synth_frontier(spark, FRONTIER_N)
-    cand = raw.withColumn("url", canonicalize_url("url")).filter(F.col("url").isNotNull())
-    # round-5 key-derivation split, mirroring the engine: ONLY url_hash64
-    # (the bloom key) rides through the F1 exchange; host and the
-    # frontier-append keys are pure functions of the canonical url and
-    # attach post-anti-join on survivors (crawl_round._discover shape —
-    # there host is derived pre-robots and shed before the exchange)
-    cand = cand.withColumn("url_hash64", F.xxhash64("url"))
-    cand = first_occurrence_dedup(cand, key="url", order=["seq"])
-    # seen set: every 7th url of the first half (steady-state: most candidates new)
-    seen, bloom = _steady_seen(spark)
-    # this mix is a young-crawl shape (candidate wave ~14x the seen set, so
-    # maybe ~ seen): the single shuffled left_anti is the right confirm
-    # plan; the broadcast reshape is for frontier >> round (see
-    # operators/seen.py docstring + BENCH.md round-4 close-out)
-    fresh = seen_anti_join(cand, seen, bloom, reshape_confirm=False)
-    from delphi_crawler_spark.functions.canonicalize import host_col
-
-    fresh = fresh.withColumn("host", host_col(F.col("url")))
-    slotted = assign_emission_slots(fresh, politeness=None)
-    return emission_order(slotted).select("url", "host", "priority", "seq", "emit_ms")
 
 
 def bloom_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -209,11 +168,11 @@ def redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pending_prune_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Steady-state round scheduling over a BIG pending set (the case the
-    crawl_schedule headline doesn't cover: pending >> admitted). 2M pending
-    rows across ~4k hosts, default politeness (5/s burst 5, 10s round →
-    ≤56 admittable per host): prune_pending_topk keeps the emission
-    window's exchange at survivor volume instead of the full table."""
+    """Steady-state round scheduling over a BIG pending set (pending >>
+    admitted). 2M pending rows across ~4k hosts, default politeness (5/s
+    burst 5, 10s round → ≤56 admittable per host): prune_pending_topk keeps
+    the emission window's exchange at survivor volume instead of the full
+    table."""
     from delphi_crawler_spark.operators.politeness import (
         admit_round,
         assign_emission_slots,
@@ -582,7 +541,6 @@ def random_walks_2m(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 BENCH_QUERIES = {
-    "crawl_schedule": crawl_schedule,
     "bloom_incremental_update": bloom_incremental_update,
     "seen_anti_join_bloom": E.q_j1_seen_anti_join_bloom,
     "politeness_token_bucket": E.q_p1_politeness_token_bucket,
@@ -682,7 +640,7 @@ def main() -> None:
         # when the latest rep CONFIRMS the best — two reps agree within 8%
         # — else keep sampling to the cap and take the min; rep_times in
         # the JSON exposes how noisy the window was.
-        min_reps, max_reps = (3, 8) if name == "crawl_schedule" else (2, 5)
+        min_reps, max_reps = 2, 5
         rep_times: list[float] = []
         while True:
             t0 = time.time()
@@ -701,11 +659,6 @@ def main() -> None:
         all_reps[name] = rep_times
         print(f"[bench] {name}: {times[name]}s (reps {rep_times})", file=sys.stderr, flush=True)
 
-    # frontier throughput: URLs pushed through the scheduling core per second
-    urls_per_sec = (
-        round(FRONTIER_N / times["crawl_schedule"], 1)
-        if "crawl_schedule" in times else None
-    )
     total = round(sum(times.values()), 3)
     sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
     try:
@@ -713,13 +666,12 @@ def main() -> None:
     except ValueError:
         sf_val = sf
     print(json.dumps({
-        "metric": "frontier throughput (URLs scheduled+deduped/sec); total headline-query wall time",
+        "metric": "total bench-query wall time",
         "value": total,
         "unit": "sec",
         "queries": times,
         "sf": sf_val,
         "frontier_urls": FRONTIER_N,
-        "frontier_urls_per_sec": urls_per_sec,
         "cpus": CPUS,
         # per-query rep times: a best/worst spread >2x on identical plans
         # indicates neighbor contention in the shared sandbox, not plan cost

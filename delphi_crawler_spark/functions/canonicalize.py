@@ -106,7 +106,8 @@ def canonicalize_url_py(raw: str | None) -> str | None:
     host, port = authority, None
     if ":" in authority:
         host, port = authority.rsplit(":", 1)
-        if not port.isdigit():
+        # a second ':' (``a.com:443:443``) is not a host:port authority
+        if not port.isdigit() or ":" in host:
             return None
     host = host.lower().rstrip(".")
     if not host:
@@ -169,26 +170,6 @@ def _canonicalize_url_udf(urls: pd.Series) -> pd.Series:
     return canonicalize_urls_pd(urls)
 
 
-# JVM-side already-canonical detector, ONE regex (a single rlike pass —
-# measured equal-or-faster than the pandas path on both a 70%-canonical mix
-# and a 100%-canonical steady-state input; see BENCH.md). Semantics mirror
-# _FAST_RE: path REQUIRED and starting with '/', so a match is the identity
-# under canonicalize_url_py. Differences that make it safe without a
-# pandas-side strip: \A..\z anchors (Java's `$` matches before a final
-# newline; \z does not), charclasses already exclude whitespace, and the
-# path grammar enumerates per-segment strings that are NOT exactly '.' or
-# '..' (empty segments stay allowed — '//' passes through canonicalization
-# unchanged). Query can never contain '/', so segment grammar never spans
-# into it.
-_FAST_JVM_SEG = r"(?:\.{0,2}[A-Za-z0-9\-_~][A-Za-z0-9\-_~.]*|\.{3,}[A-Za-z0-9\-_~.]*)?"
-_FAST_JVM_RE = (
-    r"\Ahttps?://"
-    r"[a-z0-9-]+(?:\.[a-z0-9-]+)*"
-    r"(?:/" + _FAST_JVM_SEG + r")+"
-    r"(?:\?[A-Za-z0-9\-_~.=&+]*)?\z"
-)
-
-
 def canonicalize_url(url: Column | str) -> Column:
     """C1 canonicalization (Arrow-vectorized pandas UDF; NULL = malformed).
 
@@ -197,31 +178,12 @@ def canonicalize_url(url: Column | str) -> Column:
     batch; canonical rows are passed through with zero per-row work). The
     ArrowEvalPython node materializes the result once, so downstream
     consumers (filter, hash keys, host extract, shuffle partitioning) read
-    a plain column. See ``canonicalize_url_jvm_split`` for why the
-    JVM-side split is NOT the default."""
+    a plain column. A JVM-side ``rlike`` split in front of the UDF is
+    slower here: Catalyst inlines its CASE into every consumer, so the
+    regex re-runs per consumer (~13% slower on the 2M-URL crawl core,
+    BENCH.md round-4 A/B)."""
     u = F.col(url) if isinstance(url, str) else url
     return _canonicalize_url_udf(u)
-
-
-def canonicalize_url_jvm_split(url: Column | str) -> Column:
-    """Opt-in variant: JVM regex passes already-canonical rows through
-    whole-stage codegen; only dirty rows cross the Arrow boundary (the UDF
-    receives a null-masked column — no string bytes for fast rows).
-
-    Byte-identical to ``canonicalize_url`` (property-tested). NOT the
-    default because the CASE expression is inlined by Catalyst into every
-    consumer of the output column — in the crawl core the canonical URL
-    feeds the null filter, murmur3/xxhash64 keys, host extraction and the
-    dedup shuffle partitioning before any exchange materializes it, so the
-    regex re-runs per consumer and measured ~13% SLOWER end-to-end
-    (BENCH.md round-4 A/B: best 6.05 s vs 5.35 s on the 2M-URL headline).
-    Use it only where the column feeds a single consumer or is immediately
-    materialized (exchange/write), e.g. a steady-state re-canonicalization
-    pass over frontier re-entries, where it keeps the entire batch out of
-    the Python workers."""
-    u = F.col(url) if isinstance(url, str) else url
-    fast = u.rlike(_FAST_JVM_RE)
-    return F.when(fast, u).otherwise(_canonicalize_url_udf(F.when(~fast, u)))
 
 
 # ---------------------------------------------------------------- key columns
@@ -253,12 +215,6 @@ def url_hash_col(url: Column) -> Column:
 def url_hash64_col(url: Column) -> Column:
     """xxhash64 — the 64-bit bloom-filter key."""
     return F.xxhash64(url)
-
-
-def unique_key_col(*parts: Column) -> Column:
-    """Canonical unique string, reference ``toUniqueString`` =
-    ``repo:group:artifact:version`` (MavenIdentifier.scala:25-27)."""
-    return F.concat_ws(":", *parts)
 
 
 def with_url_keys(df, url_col_name: str = "url", minimal: bool = False):

@@ -351,36 +351,12 @@ def minhash_dedup(
 # ----------------------------------------------------------------- simhash
 
 
-def simhash_col(text_col: str = "text", bits: int = 64):
-    """64-bit SimHash as ONE JVM expression: token hashes vote per bit.
-
-    For each bit i: sum over tokens of (+1 if bit set else -1) > 0.
-    Expressed with higher-order array functions (transform/aggregate/filter)
-    so it whole-stage-codegens — zero Python."""
-    words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    hashes = F.transform(words, lambda w: F.xxhash64(w))
-
-    def bit_vote(i: int):
-        votes = F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(h.bitwiseAND(F.lit(1 << i) if i < 63 else F.lit(-(1 << 63))) != 0, 1).otherwise(-1),
-        )
-        return F.when(votes > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-
-    out = F.lit(0).cast("long")
-    for i in range(bits):
-        out = out + F.shiftleft(bit_vote(i), i)
-    return out
-
-
 def simhash_signatures(
     df: DataFrame, text_col: str = "text", token_block: int = _TOKEN_BLOCK
 ) -> DataFrame:
-    """Attach ``simhash: long``. Vectorized numpy pandas UDF (the pure-JVM
-    expression above is exact but compiles 64 aggregates; numpy per Arrow
-    batch is the faster production path — both are tested equal)."""
+    """Attach ``simhash: long``. Vectorized numpy pandas UDF (a pure-JVM
+    higher-order-function expression is exact but compiles 64 aggregates;
+    numpy per Arrow batch is the faster production path)."""
 
     @F.pandas_udf(LongType())
     def _simhash(texts: pd.Series) -> pd.Series:

@@ -122,7 +122,8 @@ def prune_pending_topk(
     bite: hosts must be partition-clustered (the frontier store's
     host-bucket layout provides this; over round-robin input the local
     top-cap keeps everything) and pending-per-host must exceed the cap.
-    Single-host tunings can set CrawlConfig.prune_pending=False.
+    The crawl engine always prunes: the single-JVM wall-time loss is the
+    price of a per-round cost bounded by the admitted set, not the frontier.
     """
     import pandas as pd
 
@@ -181,10 +182,6 @@ def admit_round(slotted: DataFrame, round_ms: int) -> DataFrame:
     """Per-round budget admission (P1 + S9): schedule rows whose bucket slot
     falls inside this round; the rest remain pending for the next round."""
     return slotted.filter(F.col("emit_ms") < F.lit(round_ms))
-
-
-def deferred_round(slotted: DataFrame, round_ms: int) -> DataFrame:
-    return slotted.filter(F.col("emit_ms") >= F.lit(round_ms))
 
 
 def emission_order(df: DataFrame) -> DataFrame:

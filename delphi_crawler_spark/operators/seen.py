@@ -178,7 +178,6 @@ def seen_anti_join(
     bloom: BloomBits | None = None,
     url_col: str = "url",
     hash64_col: str = "url_hash64",
-    reshape_confirm: bool = True,
 ) -> DataFrame:
     """Keep candidates NOT in the seen set (F2/J1).
 
@@ -200,14 +199,11 @@ def seen_anti_join(
     bloom: plain exact ``left_anti``. Result is identical in every path
     (property-tested); only the shuffled volume differs.
 
-    ``reshape_confirm`` chooses the confirm's build-side economics: the
-    reshape wins iff ``|maybe| << |seen|`` (broadcast cost is paid once per
-    executor, ~|maybe| x executors), which is the steady-state crawl shape
-    — a frontier orders of magnitude bigger than one round's discoveries.
-    A young-crawl / backfill shape where the candidate wave rivals the seen
-    set (the bench's 16M-candidates-vs-1.1M-seen mix measured the
-    2→8-executor efficiency 0.43 → 0.35 under the reshape) should pass
-    ``False`` and take the single shuffled ``left_anti``.
+    Precondition: ``hash64_col`` must equal ``xxhash64(url_col)`` on both
+    sides (as ``with_url_keys`` attaches it). The bloom is probed on that
+    column and the join key leads with it, so a row whose hash disagrees
+    with its url is silently treated as unseen — the result is then no
+    longer the url-only anti-join.
     """
     if seen is None:
         return candidates
@@ -230,11 +226,8 @@ def seen_anti_join(
     )
     definite_new = flagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
     maybe = flagged.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-    if reshape_confirm:
-        hits = seen_keys.join(
-            maybe.select(*join_key).distinct(), join_key, "left_semi"
-        )
-        confirmed_new = maybe.join(hits, join_key, "left_anti")
-    else:
-        confirmed_new = maybe.join(seen_keys, join_key, "left_anti")
+    hits = seen_keys.join(
+        maybe.select(*join_key).distinct(), join_key, "left_semi"
+    )
+    confirmed_new = maybe.join(hits, join_key, "left_anti")
     return definite_new.unionByName(confirmed_new)

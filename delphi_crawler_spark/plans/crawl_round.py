@@ -36,11 +36,14 @@ now structural:
 - **No unpartitioned windows.** The global seq over discovered links is
   range-partition + partition-local sort + driver prefix-sum offsets
   (operators/ordering.py) — same bytes, no single-task sort.
-- **No full-frontier bloom rebuilds.** The bloom's merged words persist as
-  a checkpointed blob; each round ORs in a segment built from only that
-  round's appended rows (BloomBits segments are OR-mergeable). A full
-  rebuild happens only when the item count outgrows capacity (amortized,
-  geometric growth).
+- **Full bloom rebuilds only at capacity growth and process start.** The
+  bloom is in-memory derived state (the exact anti-join confirm is the
+  source of truth); the checkpoint keeps only its geometry and counts.
+  Each round ORs in a segment built from only that round's appended rows
+  (BloomBits segments are OR-mergeable). A full rebuild happens when the
+  item count outgrows capacity (amortized, geometric growth) and when a
+  process without the carried bloom resumes (one segment over the
+  checkpointed frontier's ``url_hash64``, bit-identical to the carry).
 - The seen-set anti-join is bloom-prefiltered: steady-state discovered
   links are mostly bloom-negative (no shuffle) or true-seen (dropped).
 - The fetch join is an equi-join on the doc key — at production scale the
@@ -52,7 +55,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -96,22 +98,7 @@ class CrawlConfig:
     limit: int = 0  # P2: 0 = unlimited (reference Configuration.scala:79)
     bloom_fpp: float = 0.01
     bloom_growth: int = 4  # capacity headroom factor at (re)build
-    # The merged bloom bitset is O(m_bits) — at a 10^10-URL frontier it is
-    # tens of GB, so persisting it EVERY round would make per-round write
-    # volume scale with the frontier, not the round (the sf1 soak measured
-    # exactly that: ~57 MB/round of blob at a 20M-seed frontier). The blob
-    # is derivable state (frontier url_hash64 is durable), so it is flushed
-    # every K rounds / at geometry rebuilds / before compaction; between
-    # flushes only the checkpoint's tiny meta advances and resume rebuilds
-    # the tail segments from the round-tagged frontier parts.
-    bloom_blob_every: int = 8
     n_docs: int | None = None  # size of the synthetic fetch corpus
-    use_bloom: bool = True
-    # partition-local per-host top-cap prune of the pending set before the
-    # emission window: scheduling shuffles O(admittable) rows per round
-    # instead of the full pending set (schedule is byte-identical; see
-    # operators/politeness.py::prune_pending_topk)
-    prune_pending: bool = True
     compact_every: int = 0  # run table maintenance every K rounds (0 = off)
     compact_target_bytes: int = 128 << 20
     # frontier appends are dir-partitioned on pmod(xxhash64(host), N) — the
@@ -139,11 +126,10 @@ class CrawlEngine:
         self.politeness = politeness
         self.robots = robots
         self.cfg = config or CrawlConfig()
-        # in-memory carry of the merged bloom between rounds (keyed by the
-        # checkpoint meta it corresponds to) — disk sees the blob only at
-        # flush points; a fresh process (resume) reconstructs from
-        # blob + tail parts in _load_bloom
-        self._bloom_cache: tuple[tuple, "BloomBits"] | None = None
+        # in-memory carry of the merged bloom between rounds, keyed by the
+        # checkpoint bloom meta it corresponds to; the bloom is never
+        # persisted — _load_bloom rebuilds it when the key misses
+        self._bloom_cache: tuple[dict, BloomBits] | None = None
 
     def _bucketed(self, df: DataFrame) -> tuple[DataFrame, list[str] | None]:
         """Attach the host-bucket partition column when configured."""
@@ -157,49 +143,42 @@ class CrawlEngine:
             ["host_bucket"],
         )
 
-    # ------------------------------------------------------------- bloom io
-    @staticmethod
-    def _bloom_key(meta: dict) -> tuple:
-        return (
-            meta["blob"], meta.get("blob_round"),
-            meta.get("round", meta.get("blob_round")), meta["m"], meta["k"],
+    # ------------------------------------------------------------- bloom
+    def _frontier_bloom(self, m_bits: int, k: int) -> BloomBits:
+        """One segment over the whole frontier's ``url_hash64``."""
+        return build_bloom_segment(
+            self.store.read(FRONTIER).select("url_hash64"), m_bits, k
         )
 
-    def _save_bloom(
-        self, bloom: BloomBits, items: int, capacity: int, round_no: int
-    ) -> dict:
-        """Flush the merged bitset; the blob covers all frontier rounds
-        through ``round_no`` (blob_round == round in the returned meta)."""
-        blob = self.store.save_blob("bloom", bloom.words.tobytes())
-        return {
-            "blob": blob, "blob_round": round_no, "round": round_no,
-            "m": bloom.m_bits, "k": bloom.k,
+    def _sized_bloom(self, items: int, round_no: int) -> dict:
+        """Full build with ``bloom_growth`` headroom over ``items``
+        (bootstrap and capacity growth); returns the checkpoint meta."""
+        capacity = max(1024, self.cfg.bloom_growth * items)
+        proto = BloomBits.sized(capacity, self.cfg.bloom_fpp)
+        return self._carry(
+            self._frontier_bloom(proto.m_bits, proto.k), round_no, items, capacity
+        )
+
+    def _carry(self, bloom: BloomBits, round_no: int, items: int, capacity: int) -> dict:
+        """Keep ``bloom`` in memory as the bloom of the returned meta — the
+        geometry and counts the checkpoint records in place of the bits."""
+        meta = {
+            "round": round_no, "m": bloom.m_bits, "k": bloom.k,
             "items": items, "capacity": capacity,
         }
+        self._bloom_cache = (meta, bloom)
+        return meta
 
     def _load_bloom(self, meta: dict | None) -> BloomBits | None:
-        """The logical bloom = persisted blob (rounds ≤ blob_round) OR
-        segments of the round-tagged frontier parts in (blob_round, round]
-        — O(tail rows) to rebuild, and a process that ran those rounds has
-        it cached so steady-state rounds never touch the blob at all."""
+        """The bloom the checkpoint ``meta`` describes: the in-memory carry
+        when this process produced it, else one segment over the frontier
+        (run_round has restored it to the checkpoint snapshot by now) —
+        bit-identical, since segments OR-merge."""
         if not meta:
             return None
-        key = self._bloom_key(meta)
-        if self._bloom_cache is not None and self._bloom_cache[0] == key:
-            return self._bloom_cache[1]
-        words = np.frombuffer(self.store.load_blob(meta["blob"]), dtype=np.uint64)
-        bloom = BloomBits(meta["m"], meta["k"], words.copy())
-        blob_round = meta.get("blob_round")
-        upto = meta.get("round", blob_round)
-        if blob_round is not None and upto is not None and upto > blob_round:
-            tail = self.store.read_parts_range(
-                FRONTIER, blob_round + 1, upto
-            ).select("url_hash64")
-            bloom = bloom.merge(
-                build_bloom_segment(tail, bloom.m_bits, bloom.k)
-            )
-        self._bloom_cache = (key, bloom)
-        return bloom
+        if self._bloom_cache is None or self._bloom_cache[0] != meta:
+            self._bloom_cache = (meta, self._frontier_bloom(meta["m"], meta["k"]))
+        return self._bloom_cache[1]
 
     # ------------------------------------------------------------ bootstrap
     def bootstrap(self, seeds: DataFrame) -> None:
@@ -234,15 +213,7 @@ class CrawlEngine:
             F.max("seq").alias("mx"), F.count(F.lit(1)).alias("n")
         ).collect()[0]
         max_seq, n_items = int(agg.mx or 0), int(agg.n)
-        bloom_meta = None
-        if self.cfg.use_bloom:
-            capacity = max(1024, self.cfg.bloom_growth * n_items)
-            proto = BloomBits.sized(capacity, self.cfg.bloom_fpp)
-            bloom = build_bloom_segment(
-                self.store.read(FRONTIER).select("url_hash64"), proto.m_bits, proto.k
-            )
-            bloom_meta = self._save_bloom(bloom, n_items, capacity, -1)
-            self._bloom_cache = (self._bloom_key(bloom_meta), bloom)
+        bloom_meta = self._sized_bloom(n_items, -1)
         # round -1 checkpoint anchors exact resume of round 0
         self.store.checkpoint(-1, {
             "emitted_total": 0,
@@ -290,10 +261,9 @@ class CrawlEngine:
         else:
             pending = frontier
 
-        if self.cfg.prune_pending:
-            # O(admittable) scheduling: narrow local top-cap per host, so
-            # the emission window's exchange sees survivors, not the table
-            pending = prune_pending_topk(pending, self.politeness, self.cfg.round_ms)
+        # O(admittable) scheduling: narrow local top-cap per host, so the
+        # emission window's exchange sees survivors, not the table
+        pending = prune_pending_topk(pending, self.politeness, self.cfg.round_ms)
         slotted = assign_emission_slots(pending, self.politeness)
         admitted = admit_round(slotted, self.cfg.round_ms)
         if self.cfg.limit and self.cfg.limit > 0:
@@ -397,7 +367,7 @@ class CrawlEngine:
         cand = first_occurrence_dedup(cand, key="url", order=["parent_seq", "span_pos"])
 
         seen = self.store.read(FRONTIER).select("url", "url_hash64")
-        bloom = self._load_bloom(bloom_meta) if self.cfg.use_bloom else None
+        bloom = self._load_bloom(bloom_meta)
         fresh = complete_url_keys(seen_anti_join(cand, seen, bloom))
 
         # deterministic new seq over the SURVIVORS, continuing the global
@@ -424,34 +394,20 @@ class CrawlEngine:
                 FRONTIER, new_rows, partition_by=part_by, round_no=round_no
             )
             if bloom is not None:
-                # incremental maintenance: segment over ONLY the appended
-                # part (scanned back from the manifest), OR-merged in
-                seg_src = self.store.read_parts(FRONTIER, round_no).select("url_hash64")
-                seg = build_bloom_segment(seg_src, bloom.m_bits, bloom.k)
-                bloom = bloom.merge(seg)
                 items = bloom_meta["items"] + n_new
-                capacity = bloom_meta["capacity"]
-                # pre-blob_round meta (older stores): force a flush so the
-                # meta carries coverage rounds from here on
-                blob_round = bloom_meta.get("blob_round", -(1 << 62))
-                if items > capacity:
-                    # amortized geometric rebuild: full scan, new capacity,
-                    # geometry changed -> the blob must flush now
-                    capacity = max(1024, self.cfg.bloom_growth * items)
-                    proto = BloomBits.sized(capacity, self.cfg.bloom_fpp)
-                    bloom = build_bloom_segment(
-                        self.store.read(FRONTIER).select("url_hash64"),
-                        proto.m_bits, proto.k,
-                    )
-                    bloom_meta = self._save_bloom(bloom, items, capacity, round_no)
-                elif round_no - blob_round >= max(1, self.cfg.bloom_blob_every):
-                    bloom_meta = self._save_bloom(bloom, items, capacity, round_no)
+                if items > bloom_meta["capacity"]:
+                    # amortized geometric rebuild: full scan, new capacity
+                    bloom_meta = self._sized_bloom(items, round_no)
                 else:
-                    # carry: O(1) meta advance; the blob stays at blob_round
-                    # and this round's bits live in memory + the durable
-                    # round-tagged frontier part
-                    bloom_meta = {**bloom_meta, "round": round_no, "items": items}
-                self._bloom_cache = (self._bloom_key(bloom_meta), bloom)
+                    # incremental maintenance: segment over ONLY the
+                    # appended part (scanned back from the manifest)
+                    seg = build_bloom_segment(
+                        self.store.read_parts(FRONTIER, round_no).select("url_hash64"),
+                        bloom.m_bits, bloom.k,
+                    )
+                    bloom_meta = self._carry(
+                        bloom.merge(seg), round_no, items, bloom_meta["capacity"]
+                    )
         release()
         return n_new, max_seq + n_new, bloom_meta
 
@@ -462,7 +418,7 @@ class CrawlEngine:
         """Table maintenance between rounds — the 10^10-scale housekeeping a
         per-round-part store needs (Iceberg ``rewrite_data_files`` +
         ``expire_snapshots``): without it, K rounds mean K-part manifests
-        (small-files read overhead) and unbounded manifest/blob/orphan disk.
+        (small-files read overhead) and unbounded manifest/orphan disk.
 
         Resume-safe ordering:
         1. restore frontier/fetched to the last checkpoint (discard any
@@ -473,8 +429,10 @@ class CrawlEngine:
            manifests (compaction deletes nothing, so a kill before this
            amend still resumes from the old manifest);
         4. ``expire`` old manifests + orphan parts, protecting the amended
-           checkpoint's manifests; drop bloom blobs the checkpoint no
-           longer references.
+           checkpoint's manifests.
+
+        The bloom is untouched: it is in-memory state over the frontier's
+        rows, which compaction rewrites but does not change.
         """
         tb = target_bytes or self.cfg.compact_target_bytes
         last = self.store.last_checkpoint()
@@ -484,19 +442,6 @@ class CrawlEngine:
                 snap = last.get(key)
                 if snap and self.store.current_snapshot(tbl) != snap:
                     self.store.restore(tbl, snap)
-        # flush the bloom tail BEFORE compaction: bin-packing may merge the
-        # round-tagged frontier parts the tail rebuild would prune to, so
-        # the blob must cover every checkpointed round first (this also
-        # amortizes blob writes to maintenance cadence at steady state)
-        if last is not None and last.get("bloom"):
-            bm = last["bloom"]
-            covered = bm.get("round", bm.get("blob_round"))
-            if covered is not None and covered != bm.get("blob_round"):
-                bloom = self._load_bloom(bm)
-                bm = self._save_bloom(bloom, bm["items"], bm["capacity"], covered)
-                self.store.amend_checkpoint(last["round"], {"bloom": bm})
-                self._bloom_cache = (self._bloom_key(bm), bloom)
-                last = self.store.last_checkpoint()
         protect_rounds = frozenset(
             {last["round"] + 1} if last is not None else set()
         )
@@ -531,10 +476,6 @@ class CrawlEngine:
                 **stats.get(tbl, {}),
                 **self.store.expire(tbl, keep_manifests, protect),
             }
-        if last is not None and last.get("bloom"):
-            stats["blobs_removed"] = self.store.expire_blobs(
-                {last["bloom"]["blob"]}
-            )
         return stats
 
     # ------------------------------------------------------------ run loop

@@ -320,9 +320,8 @@ class TableStore:
         return self._read_paths(table, paths)
 
     def read_parts_range(self, table: str, lo_round: int, hi_round: int) -> DataFrame:
-        """Scan the parts tagged with any round in [lo_round, hi_round] —
-        the resume path's bloom tail rebuild (rounds appended since the last
-        persisted blob). Same manifest-level pruning as ``read_parts``."""
+        """Scan the parts tagged with any round in [lo_round, hi_round].
+        Same manifest-level pruning as ``read_parts``."""
         paths = [
             os.path.join(self._tdir(table), p["path"])
             for p in self.parts(table)
@@ -485,9 +484,8 @@ class TableStore:
         return {"manifests_removed": dropped_manis, "parts_removed": dropped_parts}
 
     def expire_blobs(self, keep: set[str] | frozenset[str]) -> int:
-        """Delete sidecar blobs not in ``keep`` (store-relative paths). The
-        engine passes the blobs its latest checkpoint references — e.g. one
-        bloom blob per round accrues otherwise."""
+        """Delete sidecar blobs not in ``keep`` (store-relative paths) —
+        callers pass the blobs their latest checkpoint references."""
         d = os.path.join(self.root, "blobs")
         if not os.path.isdir(d):
             return 0

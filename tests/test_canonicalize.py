@@ -49,6 +49,10 @@ GOLDEN = [
     ("notaurl", None),
     ("ftp://example.com/x", None),
     ("https://:80/x", None),
+    # two ports: not a host:port authority (else a default port survives
+    # one pass and the result is not idempotent)
+    ("https://a.com:443:443/x", None),
+    ("https://a.com:443:8080/x", None),
 ]
 
 
@@ -106,17 +110,12 @@ def test_vectorized_fast_path_equivalence():
     assert got.fillna("~").tolist() == exp.fillna("~").tolist()
 
 
-def test_jvm_fast_split_equivalence(spark):
-    """The opt-in JVM already-canonical pre-split (fast rows never cross
-    Arrow) must be byte-identical to the per-row reference implementation —
-    especially around its edges: whitespace anywhere disables the fast
-    branch (the \\A..\\z anchors defuse Java's `$`-before-final-newline),
-    dot segments and near-dot filenames are told apart, and charclass
-    outliers (+ = & % in the path) fall through to the slow path which
-    encodes them."""
-    from delphi_crawler_spark.functions.canonicalize import (
-        canonicalize_url_jvm_split,
-    )
+def test_udf_edge_vectors(spark):
+    """The Spark UDF (with its in-batch already-canonical fast path) must be
+    byte-identical to the per-row reference implementation around the fast
+    path's edges: whitespace anywhere, dot segments vs near-dot filenames,
+    and charclass outliers (+ = & % in the path) that must take the slow
+    path and be encoded."""
     tricky = [
         "https://example.com/clean/path",       # fast branch, identity
         "https://example.com/p?a=1&b=2+3",      # fast branch with query
@@ -145,13 +144,8 @@ def test_jvm_fast_split_equivalence(spark):
     expected = [canonicalize_url_py(u) if u is not None else None for u in urls]
     df = spark.createDataFrame(
         pd.DataFrame({"url": pd.Series(urls, dtype=object)})
-    ).select(canonicalize_url_jvm_split("url").alias("c"))
-    assert [r.c for r in df.collect()] == expected
-    # and the default (pandas-internal fast path) agrees on the same vectors
-    df2 = spark.createDataFrame(
-        pd.DataFrame({"url": pd.Series(urls, dtype=object)})
     ).select(canonicalize_url("url").alias("c"))
-    assert [r.c for r in df2.collect()] == expected
+    assert [r.c for r in df.collect()] == expected
 
 
 def test_idempotent():
@@ -160,6 +154,9 @@ def test_idempotent():
         c = canonicalize_url_py(u)
         assert c is not None
         assert canonicalize_url_py(c) == c
+    for u in ("https://a.com:443:443/x", "https://a.com:443:8080/x"):
+        c = canonicalize_url_py(u)
+        assert c is None or canonicalize_url_py(c) == c
 
 
 def test_strip_tracking_params(spark):

@@ -21,13 +21,12 @@ os.environ["SPARK_EXECUTOR_MEM"] = "1g"
 from pyspark.sql import functions as F
 from delphi_crawler_spark.session import get_spark
 from delphi_crawler_spark.functions.canonicalize import (
-    canonicalize_url_jvm_split as canonicalize_url,
-    host_col, host_rev_col, url_hash_col)
+    canonicalize_url, host_col, host_rev_col, url_hash_col)
 
 spark = get_spark("cluster-mode-test", cores=4)
 urls = [
-    "HTTP://Example.COM:80/a/../b/./c?x=1",   # dirty -> slow path (Arrow UDF)
-    "https://example.com/clean/path",          # already canonical -> JVM fast path
+    "HTTP://Example.COM:80/a/../b/./c?x=1",   # dirty -> per-row slow path
+    "https://example.com/clean/path",          # already canonical -> batch fast path
     "not a url",                               # malformed -> NULL (F5)
 ]
 df = spark.createDataFrame([(u,) for u in urls], ["url"]).repartition(4)
@@ -58,8 +57,9 @@ def test_local_cluster_executors_run_the_hot_path(tmp_path):
             result = json.loads(line[len("RESULT "):])
     assert result is not None, out.stderr[-2000:]
     assert result["master"] == "local-cluster[2,2,2048]"
-    # both the JVM fast path and the Arrow slow path produced canonical rows
-    # on executor JVMs, and the malformed row was dropped as NULL
+    # both the in-batch fast path and the per-row slow path produced
+    # canonical rows on executor JVMs, and the malformed row was dropped
+    # as NULL
     assert result["rows"] == [
         "http://example.com/b/c?x=1",
         "https://example.com/clean/path",

@@ -86,8 +86,7 @@ def test_ordering_and_seen_match_oracle(spark, tmp_path, oracle_result):
 
 def test_parallelism_invariance(spark, tmp_path, oracle_result):
     """Same bytes at different shuffle parallelism (the in-process proxy for
-    the N vs 4N cluster-size criterion; bench.py does real local[8] vs
-    local[32] in separate processes)."""
+    the N vs 4N cluster-size criterion)."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
@@ -101,7 +100,9 @@ def test_parallelism_invariance(spark, tmp_path, oracle_result):
 def test_resume_equivalence_mid_round_kill(spark, tmp_path, oracle_result):
     """Kill after the schedule append + frontier mutation of round 1 but
     before its checkpoint; a fresh engine must resume and produce tables
-    byte-equal to the uninterrupted run (SURVEY.md §5d)."""
+    byte-equal to the uninterrupted run (SURVEY.md §5d). The bloom is not
+    persisted, so the fresh engine rebuilds it cold from the checkpointed
+    frontier; that bloom must be byte-identical to the carried one."""
     root = tmp_path / "store_kill"
     eng = CrawlEngine(
         spark, str(root),
@@ -146,6 +147,18 @@ def test_resume_equivalence_mid_round_kill(spark, tmp_path, oracle_result):
     assert frames_equal(
         eng2.frontier_view().select(cols), clean.frontier_view().select(cols)
     )
+
+    # bloom: the clean run carried its bloom in memory through every round;
+    # eng2 rebuilt its own cold at round 1 and carried it from there; a
+    # third engine builds one cold from the final checkpoint
+    meta = clean.store.last_checkpoint()["bloom"]
+    assert eng2.store.last_checkpoint()["bloom"] == meta
+    assert clean._bloom_cache[0] == meta  # carried, never rebuilt
+    carried = clean._load_bloom(meta)
+    cold = CrawlEngine(spark, str(root))._load_bloom(meta)
+    for bloom in (eng2._load_bloom(meta), cold):
+        assert (bloom.m_bits, bloom.k) == (carried.m_bits, carried.k)
+        assert bloom.words.tobytes() == carried.words.tobytes()
 
 
 def test_rounds_are_idempotent(spark, tmp_path):
@@ -268,8 +281,10 @@ def test_write_volume_flat_over_many_rounds(spark, tmp_path):
 def test_bloom_is_maintained_incrementally(spark, tmp_path):
     """Scale invariant (round-1 scale-killer #3): the bloom's item count
     tracks the frontier exactly via OR-merged per-round segments — no
-    full-table rebuild below capacity — and the anti-join result still
-    equals the bloomless exact path (fail-open property)."""
+    full-table rebuild below capacity — and only its geometry and counts
+    reach the checkpoint: no round writes the bitset."""
+    import os
+
     root = tmp_path / "store_bloom"
     eng = CrawlEngine(
         spark, str(root),
@@ -278,127 +293,17 @@ def test_bloom_is_maintained_incrementally(spark, tmp_path):
     )
     eng.bootstrap(seed_urls_df(spark, n=N_SEEDS))
     docs = docs_df(spark, n=N_DOCS)
-    blobs = []
+    metas = [eng.store.last_checkpoint()["bloom"]]
+    assert metas[0]["round"] == -1
     for rnd in range(N_ROUNDS):
         stats = eng.run_round(rnd, docs=docs)
         meta = stats["bloom"]
         assert meta["items"] == eng.store.read("frontier").count()
-        assert meta["round"] == rnd  # logical coverage advances every round
-        blobs.append(meta["blob"])
+        assert meta["round"] == rnd  # coverage advances every round
+        assert meta["items"] == metas[-1]["items"] + stats["new_links"]
+        metas.append(meta)
     # same geometry across rounds (pure OR-merge, no rebuild under capacity)
-    metas = [eng.store.last_checkpoint()["bloom"]]
-    assert metas[0]["m"] > 0
-    # O(round) write volume: under the default flush cadence the bootstrap
-    # blob CARRIES across these rounds — per-round disk cost is the tiny
-    # checkpoint meta, never an O(m_bits) bitset rewrite
-    assert len(set(blobs)) == 1
-    assert metas[0]["blob_round"] == -1
-
-    # bloomless engine produces the identical schedule + seen set
-    eng2 = CrawlEngine(
-        spark, str(tmp_path / "store_nobloom"),
-        politeness=politeness_df(spark), robots=robots_df(spark),
-        config=CrawlConfig(round_ms=ROUND_MS, n_docs=N_DOCS, use_bloom=False),
-    )
-    eng2.bootstrap(seed_urls_df(spark, n=N_SEEDS))
-    for rnd in range(N_ROUNDS):
-        eng2.run_round(rnd, docs=docs)
-    assert eng2.schedule_rows() == eng.schedule_rows()
-    assert eng2.seen_set() == eng.seen_set()
-
-
-def test_bloom_blob_amortized_and_resume_exact(spark, tmp_path):
-    """The merged bloom bitset is O(m_bits) — tens of GB at 10^10-URL
-    geometry — so persisting it per round would make per-round write volume
-    scale with the FRONTIER (the sf1 soak measured ~57 MB/round of blob at
-    a 20M-seed frontier). Blob writes must amortize to the flush cadence;
-    between flushes the checkpoint advances only meta, and a fresh process
-    rebuilds the tail from the round-tagged frontier parts. The rebuilt
-    bloom must be BYTE-IDENTICAL to the continuously-carried one, and
-    maintenance must flush the tail before compaction can merge the parts
-    the rebuild would prune to."""
-    import os
-
-    def mkcfg():
-        return CrawlConfig(round_ms=ROUND_MS, n_docs=N_DOCS, bloom_blob_every=2)
-
-    n_rounds = 5
-
-    def blob_files(root):
-        d = os.path.join(str(root), "blobs")
-        return sorted(f for f in os.listdir(d)) if os.path.isdir(d) else []
-
-    # continuous run: blob written at bootstrap then only at cadence hits
-    root_a = tmp_path / "store_amort_a"
-    eng_a = CrawlEngine(
-        spark, str(root_a),
-        politeness=politeness_df(spark), robots=robots_df(spark), config=mkcfg(),
-    )
-    eng_a.bootstrap(seed_urls_df(spark, n=N_SEEDS))
-    # fresh (deterministic) docs per round so every round appends new links
-    # and the coverage round advances — the soak's shape
-    def round_docs(rnd):
-        return docs_df(spark, n=N_DOCS, seed=700 + rnd)
-
-    for rnd in range(n_rounds):
-        eng_a.run_round(rnd, docs=round_docs(rnd))
-    # flushes: bootstrap (blob_round -1), round 1, round 3 — rounds 0/2/4 carry
-    assert len(blob_files(root_a)) == 3, blob_files(root_a)
-    meta_a = eng_a.store.last_checkpoint()["bloom"]
-    assert meta_a["blob_round"] == 3 and meta_a["round"] == 4
-
-    # kill-and-resume run: round 3 onward in a FRESH engine (cold cache =
-    # new process) whose first act is the blob + tail-part rebuild
-    root_b = tmp_path / "store_amort_b"
-    eng_b1 = CrawlEngine(
-        spark, str(root_b),
-        politeness=politeness_df(spark), robots=robots_df(spark), config=mkcfg(),
-    )
-    eng_b1.bootstrap(seed_urls_df(spark, n=N_SEEDS))
-    for rnd in range(3):
-        eng_b1.run_round(rnd, docs=round_docs(rnd))
-    eng_b2 = CrawlEngine(
-        spark, str(root_b),
-        politeness=politeness_df(spark), robots=robots_df(spark), config=mkcfg(),
-    )
-    for rnd in range(3, n_rounds):
-        eng_b2.run_round(rnd, docs=round_docs(rnd))
-    assert eng_b2.schedule_rows() == eng_a.schedule_rows()
-
-    # byte-identical logical blooms, loaded through the cold-cache path on
-    # BOTH stores (blob + tail rebuild, no in-memory carry)
-    meta_b = eng_b2.store.last_checkpoint()["bloom"]
-    cold_a = CrawlEngine(
-        spark, str(root_a),
-        politeness=politeness_df(spark), robots=robots_df(spark), config=mkcfg(),
-    )
-    cold_b = CrawlEngine(
-        spark, str(root_b),
-        politeness=politeness_df(spark), robots=robots_df(spark), config=mkcfg(),
-    )
-    bloom_a = cold_a._load_bloom(meta_a)
-    bloom_b = cold_b._load_bloom(meta_b)
-    assert (bloom_a.m_bits, bloom_a.k) == (bloom_b.m_bits, bloom_b.k)
-    assert bloom_a.words.tobytes() == bloom_b.words.tobytes()
-    # and equal to the carried in-memory bloom of the continuous run
-    carried = eng_a._load_bloom(meta_a)
-    assert carried.words.tobytes() == bloom_a.words.tobytes()
-
-    # maintenance flushes the tail (blob covers every checkpointed round)
-    # BEFORE compaction, and the flushed bitset is unchanged
-    eng_a.maintain()
-    meta_m = eng_a.store.last_checkpoint()["bloom"]
-    assert meta_m["blob_round"] == meta_m["round"] == 4
-    cold_m = CrawlEngine(
-        spark, str(root_a),
-        politeness=politeness_df(spark), robots=robots_df(spark), config=mkcfg(),
-    )
-    assert cold_m._load_bloom(meta_m).words.tobytes() == bloom_a.words.tobytes()
-    # resume AFTER maintenance (tail parts possibly compacted away) works
-    # from the flushed blob alone
-    eng_a2 = CrawlEngine(
-        spark, str(root_a),
-        politeness=politeness_df(spark), robots=robots_df(spark), config=mkcfg(),
-    )
-    stats = eng_a2.run_round(n_rounds, docs=round_docs(n_rounds))
-    assert stats["new_links"] >= 0
+    assert metas[-1]["m"] > 0
+    assert {(m["m"], m["k"]) for m in metas} == {(metas[0]["m"], metas[0]["k"])}
+    assert set(metas[-1]) == {"round", "m", "k", "items", "capacity"}
+    assert not os.path.exists(os.path.join(str(root), "blobs"))

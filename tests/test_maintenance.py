@@ -5,7 +5,7 @@ schedule, seen set, and resume behavior as a never-maintained store.
 
 At 10^10-URL scale these are load-bearing: one part per round means a
 K-round crawl reads K small parquet directories per scan (file-listing +
-task overhead), and every round leaks a manifest + a bloom blob. Mirrors
+task overhead), and every round leaks a manifest. Mirrors
 Iceberg ``rewrite_data_files`` (binpack) + ``expire_snapshots``.
 """
 
@@ -133,7 +133,7 @@ def _run(eng, spark, n_rounds=N_ROUNDS):
 def test_maintain_is_semantically_invisible(spark, tmp_path):
     """A crawl that compacts+expires after every round emits the exact same
     schedule and seen set as one that never does, and its store stays O(1)
-    parts / manifests / blobs instead of O(rounds)."""
+    parts / manifests instead of O(rounds)."""
     plain = _run(_engine(spark, tmp_path / "plain"), spark)
     kept = _run(_engine(spark, tmp_path / "kept", compact_every=1), spark)
 
@@ -146,8 +146,8 @@ def test_maintain_is_semantically_invisible(spark, tmp_path):
     tdir = os.path.join(str(tmp_path / "kept"), FRONTIER)
     manis = [f for f in os.listdir(tdir) if f.startswith("mani-")]
     assert len(manis) <= 4  # keep_manifests=3 + current
-    blob_dir = os.path.join(str(tmp_path / "kept"), "blobs")
-    assert len(os.listdir(blob_dir)) == 1  # only the live bloom blob
+    # the bloom is in-memory state: neither rounds nor maintenance write it
+    assert not os.path.exists(os.path.join(str(tmp_path / "kept"), "blobs"))
     # no orphan part dirs: everything on disk is referenced by some
     # RETAINED manifest (retained manifests must stay restorable)
     import json

@@ -114,14 +114,6 @@ def test_seen_anti_join_bloom_property(spark):
     assert exact == set(
         r.url for r in cand.join(seen.select("url"), "url", "left_anti").select("url").collect()
     )
-    # both confirm shapes (broadcast reshape vs single shuffled left_anti)
-    # are result-identical — only the build-side economics differ
-    assert exact == set(
-        r.url
-        for r in seen_anti_join(cand, seen, bloom, reshape_confirm=False)
-        .select("url")
-        .collect()
-    )
 
 
 # -------------------------------------------------------------------- robots

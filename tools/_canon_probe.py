@@ -1,8 +1,8 @@
-"""Canonicalizer fast-path microbench: composed JVM-split expression vs
-UDF-only path over the bench synth frontier mix (~70% already-canonical —
-the steady-state shape; steady frontier re-entries are ~100% canonical).
+"""Canonicalizer microbench: ``canonicalize_url`` over the bench synth
+frontier mix (~70% already-canonical — the steady-state shape; steady
+frontier re-entries are ~100% canonical).
 
-`python tools/_canon_probe.py <cores> <n> <reps>` → one JSON line per mode.
+`python tools/_canon_probe.py <cores> <n> <reps>` → one JSON line.
 Fresh process per invocation; run on a calm host (see BENCH_probes.md
 protocol).
 """
@@ -22,11 +22,8 @@ def main() -> None:
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 4_000_000
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 
-    from pyspark.sql import functions as F
-
     import bench
-    from delphi_crawler_spark.functions.canonicalize import (
-        _canonicalize_url_udf, canonicalize_url)
+    from delphi_crawler_spark.functions.canonicalize import canonicalize_url
     from delphi_crawler_spark.session import get_spark
 
     spark = get_spark("canon-probe", cores=cores)
@@ -34,28 +31,15 @@ def main() -> None:
     raw = bench.synth_frontier(spark, n).select("url").persist()
     raw.count()
 
-    modes = {
-        "udf_only": lambda df: df.select(_canonicalize_url_udf("url").alias("c")),
-        "jvm_split": lambda df: df.select(canonicalize_url("url").alias("c")),
-    }
-    out = {}
-    for name, fn in modes.items():
-        best = None
-        times = []
-        for _ in range(reps):
-            t0 = time.time()
-            fn(raw).selectExpr("count(c) as n", "sum(length(c)) as b").collect()
-            dt = time.time() - t0
-            times.append(round(dt, 3))
-            best = dt if best is None else min(best, dt)
-        out[name] = {"best_sec": round(best, 3), "reps": times,
-                     "urls_per_sec": round(n / best, 1)}
-        print(json.dumps({"mode": name, "cores": cores, "n": n, **out[name]}),
-              flush=True)
-    # equivalence spot check rides along: both modes must agree on count+bytes
-    a = modes["udf_only"](raw).selectExpr("count(c)", "sum(length(c))").collect()
-    b = modes["jvm_split"](raw).selectExpr("count(c)", "sum(length(c))").collect()
-    print(json.dumps({"equiv": a == b}), flush=True)
+    times = []
+    for _ in range(reps):
+        t0 = time.time()
+        raw.select(canonicalize_url("url").alias("c")).selectExpr(
+            "count(c) as n", "sum(length(c)) as b").collect()
+        times.append(round(time.time() - t0, 3))
+    best = min(times)
+    print(json.dumps({"cores": cores, "n": n, "best_sec": best, "reps": times,
+                      "urls_per_sec": round(n / best, 1)}), flush=True)
     spark.stop()
 
 

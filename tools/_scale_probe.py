@@ -3,7 +3,6 @@
 {job, cores, n, best_sec, per_sec}.
 
 Jobs:
-- crawl:   bench.crawl_schedule (the headline frontier scheduling core)
 - minhash: MinHash signature computation over synthetic docs (CPU-dense
            Arrow-UDF stage — the compute-scaling probe)
 - spin:    pure-python multiprocessing spin (host-capability control; no
@@ -65,10 +64,7 @@ def main() -> None:
     bench.FRONTIER_N = n
     bench.warmup(spark)
 
-    if job == "crawl":
-        def make():
-            return bench.crawl_schedule(spark, os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    elif job == "minhash":
+    if job == "minhash":
         from delphi_crawler_spark.operators.dedup_fuzzy import minhash_signatures
 
         # pre-materialized (persist + count BEFORE the timer): the probe

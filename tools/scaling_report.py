@@ -11,10 +11,11 @@ repetitions so shared-host contention spikes hit both with equal
 probability, and best-of is taken (least-contaminated estimate on a noisy
 shared VM).
 
-Three probes per level:
-- crawl   — the headline end-to-end frontier scheduling core
+Two probes per level:
 - minhash — a CPU-dense vectorized-UDF operator (compute scaling)
 - spin    — a no-Spark pure-process control: the host's own scaling ceiling
+
+`python tools/scaling_report.py [reps] [level_lo level_hi] [--executors]`
 """
 
 from __future__ import annotations
@@ -58,9 +59,8 @@ def main() -> None:
     argv = [a for a in sys.argv[1:] if a != "--executors"]
     executor_mode = "--executors" in sys.argv
     reps = int(argv[0]) if len(argv) > 0 else 2
-    crawl_n = int(argv[1]) if len(argv) > 1 else 16_000_000
     minhash_n = 600_000
-    levels = (int(argv[2]), int(argv[3])) if len(argv) > 3 else (8, 32)
+    levels = (int(argv[1]), int(argv[2])) if len(argv) > 2 else (8, 32)
     if executor_mode:
         # Levels are EXECUTOR counts; each executor is a separate JVM with
         # CORES_PER_EXEC cores — the closest this single host gets to the
@@ -80,17 +80,15 @@ def main() -> None:
           flush=True)
     if not ok:
         sys.exit(3)
-    jobs = [("crawl", crawl_n), ("minhash", minhash_n), ("spin", 0)]
+    jobs = [("minhash", minhash_n), ("spin", 0)]
     best: dict[tuple[str, int], dict] = {}
     for r in range(reps):
         for lv in levels:
             for job, n in jobs:
                 # Spark probes take best-of-3 INSIDE one JVM: rep 1 pays the
-                # cold costs (python-worker spin-up, steady-seen/bloom build)
-                # and reps 2-3 measure the steady-state round — the same
-                # unit bench.py's headline reports. A cold single-rep probe
-                # conflates fixed setup with marginal rate (the round-1
-                # 43k-vs-250k confusion all over again).
+                # cold costs (python-worker spin-up) and reps 2-3 measure the
+                # steady state. A cold single-rep probe conflates fixed
+                # setup with marginal rate.
                 res = probe(job, total[lv], n, 3 if job != "spin" else 2,
                             master=None if job == "spin" else masters[lv])
                 key = (job, lv)
@@ -105,7 +103,6 @@ def main() -> None:
         hi = best[(job, levels[1])]["per_sec"]
         return lo, hi, (hi / lo) / (levels[1] / levels[0])
 
-    c_lo, c_hi, c_eff = eff("crawl")
     m_lo, m_hi, m_eff = eff("minhash")
     s_lo, s_hi, s_eff = eff("spin")
 
@@ -142,7 +139,6 @@ def main() -> None:
 
 | probe | what it measures | {lab_lo} | {lab_hi} | speedup | efficiency |
 |---|---|---|---|---|---|
-| `crawl` ({crawl_n / 1e6:.0f}M URLs) | end-to-end scheduling core: canonicalize → keys → F1 dedup → bloom anti-join → politeness slots → exact emission order | {c_lo:,.0f} URLs/s | {c_hi:,.0f} URLs/s | {c_hi / c_lo:.2f}× | **{c_eff:.2f}** |
 | `minhash` ({minhash_n / 1e3:.0f}k docs) | CPU-dense vectorized-UDF operator (MinHash signatures) | {m_lo:,.0f} docs/s | {m_hi:,.0f} docs/s | {m_hi / m_lo:.2f}× | **{m_eff:.2f}** |
 | `spin` (control, no Spark) | the shared host's own process-scaling ceiling | {s_lo:,.0f} it/s | {s_hi:,.0f} it/s | {s_hi / s_lo:.2f}× | **{s_eff:.2f}** |
 
@@ -153,7 +149,6 @@ def main() -> None:
   over this window's core span on this VM (neighbor tenants + SMT).
 - The **CPU-dense operator** tracks the host ceiling — the engine's
   vectorized-UDF stages add no scaling bottleneck of their own.
-- {"The **end-to-end core** here runs on separate executor JVMs (own heap, GC, shuffle server, python workers) — the single-JVM sharing artifact of local[N] mode is absent; what remains shared is only the physical memory bus and disk of the one host." if executor_mode else "The **end-to-end core** saturates earlier: its per-row work is tiny (~15 µs-core/URL), so above ~8 local threads the single JVM's memory bus (Arrow string copies + shuffle serialization, shared with every other thread of the same process) is the binding constraint — a local-mode artifact, not a plan property. On a real N→4N *executor* scale-out each executor is a separate JVM/machine with its own memory bus; the plan itself has no serial choke point: every stage is hash/range-partitioned (audited in `tests/test_plans.py` — single host-shuffle politeness, partial-aggregating dedup, bloom-prefiltered anti-join that keeps the steady-state majority of rows out of the shuffle entirely, explicit skew salting for hot hosts)."}
 
 Raw best-of JSON:
 
