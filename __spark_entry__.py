@@ -414,10 +414,10 @@ def q_p6_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_j1_seen_anti_join_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2/J1: the URL-seen existence anti-join with the broadcast-bloom
-    prefilter (treeAggregate-merged bitsets): bloom-negative rows skip the
-    shuffle, bloom-positive rows get the exact left_anti confirm — result
-    provably identical to the plain anti-join (reference
-    ArtifactExistsQuery.scala:35-44)."""
+    prefilter (treeAggregate-merged bitsets): the bloom-positive rows'
+    hashes probe the seen scan for hits, and the candidates anti-join the
+    broadcast hits — result provably identical to the plain anti-join
+    (reference ArtifactExistsQuery.scala:35-44)."""
     _ensure_pkg(spark)
     from delphi_crawler_spark.operators.seen import build_bloom, seen_anti_join
 
@@ -443,8 +443,8 @@ def q_j1b_seen_anti_join_cuckoo(spark: SparkSession, sf_dir: str) -> DataFrame:
     query exercises the one capability Bloom lacks: a recrawl-invalidation
     batch (parts with p_size > 45) is *deleted* from the filter, so those
     URLs are admitted again. Exactness still comes from the left_anti
-    confirm; the filter only routes rows around the shuffle (reference
-    semantics ArtifactExistsQuery.scala:35-44)."""
+    confirm; the filter only bounds the confirm's broadcast build sides
+    (reference semantics ArtifactExistsQuery.scala:35-44)."""
     _ensure_pkg(spark)
     from delphi_crawler_spark.operators.cuckoo import (
         build_cuckoo,

@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
+from delphi_crawler_spark.operators.seen import confirm_anti_join
+
 SLOTS = 4
 _FP_MIX = np.uint64(0x9E3779B1)  # golden-ratio odd multiplier for H(fp)
 
@@ -344,7 +346,8 @@ def delete_cuckoo_df(
 
 def might_contain_col(spark: SparkSession, cf: CuckooFilter, key_col: str):
     """Vectorized membership Column (Arrow-batched pandas UDF over one
-    broadcast of the slot table — mirrors ``seen.might_contain_col``)."""
+    broadcast of the slot table — mirrors ``seen.might_contain_col``,
+    nondeterministic for the same reason)."""
     bc = spark.sparkContext.broadcast((cf.n_buckets, cf.buckets, cf.stash))
 
     @F.pandas_udf(BooleanType())
@@ -354,7 +357,7 @@ def might_contain_col(spark: SparkSession, cf: CuckooFilter, key_col: str):
         arr = vals.to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
         return pd.Series(f.might_contain_many(arr))
 
-    return _might_contain(F.col(key_col))
+    return _might_contain.asNondeterministic()(F.col(key_col))
 
 
 def seen_anti_join_cuckoo(
@@ -364,21 +367,11 @@ def seen_anti_join_cuckoo(
     url_col: str = "url",
     hash64_col: str = "url_hash64",
 ) -> DataFrame:
-    """Two-tier seen anti-join with the cuckoo prefilter: filter-negative
-    rows are definitely new and skip the shuffle; positives get the exact
-    ``left_anti`` confirm on the URL string. Identical result to the plain
-    anti-join by construction (property-tested), same shape as
-    ``seen.seen_anti_join``."""
-    if seen is None:
-        return candidates
-    seen_keys = seen.select(url_col)
-    if cf is None:
-        return candidates.join(seen_keys, url_col, "left_anti")
-    spark = candidates.sparkSession
-    flagged = candidates.withColumn(
-        "__maybe_seen", might_contain_col(spark, cf, hash64_col)
-    )
-    definite_new = flagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
-    maybe = flagged.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-    confirmed_new = maybe.join(seen_keys, url_col, "left_anti")
-    return definite_new.unionByName(confirmed_new)
+    """Two-tier seen anti-join with the cuckoo prefilter: the same exact
+    confirm as ``seen.seen_anti_join`` (``seen.confirm_anti_join``), with
+    the cuckoo probe as its membership column. Identical result to the
+    plain anti-join by construction (property-tested)."""
+    maybe_seen = None
+    if cf is not None and seen is not None:
+        maybe_seen = might_contain_col(candidates.sparkSession, cf, hash64_col)
+    return confirm_anti_join(candidates, seen, maybe_seen, url_col, hash64_col)

@@ -14,16 +14,19 @@ North-rule realization at 10^10-URL scale:
    **broadcast** to every executor. This is the only RDD-level custom
    aggregate in the engine; bit setting is numpy-vectorized
    (``bitwise_or.at``), not per-row Python.
-2. **Vectorized prefilter.** A pandas UDF tests k double-hashed positions
-   per Arrow batch. Candidates whose bits are not all set are *definitely
-   new* — they skip the join entirely. At steady state the overwhelming
-   majority of discovered links are either already-seen (bloom positive,
-   cheap confirm) or brand-new (bloom negative, no shuffle at all), so the
-   expensive exact join runs only on the "maybe" sliver + true hits.
-3. **Exact left_anti ground truth.** The join is on the full canonical URL
-   string (not the hash), so a 64-bit collision can never drop a distinct
-   URL; the bloom can only *reduce cost*, never change the result — tested
-   as a property.
+2. **Vectorized prefilter, O(round) Python.** A pandas UDF tests k
+   double-hashed positions per Arrow batch of the round's candidates only.
+   It is marked nondeterministic, so Catalyst cannot infer a copy of it onto
+   the seen side of the confirm's equi-join on ``url_hash64``.
+3. **Exact confirm that scans the seen side once, never shuffles it.** The
+   bloom-positive candidates' 8-byte hashes are broadcast into a
+   ``left_semi`` probe of the plain seen-set scan; the rows it keeps are
+   the hits. The result is ``candidates LEFT ANTI broadcast(hits)`` on
+   ``[url_hash64, url]``: the full URL string is in the key, so a 64-bit
+   collision can never drop a distinct URL, and a bloom-negative
+   candidate's hash is not in the seen set, so it can never match a hit.
+   The bloom only bounds the two broadcast build sides to O(bloom-positive
+   candidates of one round); it never changes the result (property-tested).
 
 Fail-open: like the reference's crawl-again bias, a missing/empty bloom
 degrades to the plain exact anti-join.
@@ -36,7 +39,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
@@ -159,7 +162,9 @@ def build_bloom_segment(
 
 def might_contain_col(spark: SparkSession, bloom: BloomBits, key_col: str):
     """Vectorized membership test as a Column (Arrow-batched pandas UDF over
-    a broadcast of the bitset — one broadcast per executor, not per task)."""
+    a broadcast of the bitset — one broadcast per executor, not per task).
+    Nondeterministic, so Catalyst never copies the probe across an
+    equi-join on ``key_col`` (see ``confirm_anti_join``)."""
     bc = spark.sparkContext.broadcast((bloom.m_bits, bloom.k, bloom.words))
 
     @F.pandas_udf(BooleanType())
@@ -169,7 +174,66 @@ def might_contain_col(spark: SparkSession, bloom: BloomBits, key_col: str):
         arr = vals.to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
         return pd.Series(b.might_contain_many(arr))
 
-    return _might_contain(F.col(key_col))
+    return _might_contain.asNondeterministic()(F.col(key_col))
+
+
+def _hash_checked(df: DataFrame, url_col: str, hash64_col: str) -> DataFrame:
+    """``df`` with ``hash64_col`` re-projected through a
+    ``hash64_col == xxhash64(url_col)`` assertion: the value is unchanged,
+    and a row that breaks the invariant fails the job instead of silently
+    escaping the hash-probed confirm. CollapseProject folds it into the
+    neighbouring projection, so it adds no job.
+
+    The trailing ``0`` is never returned (a null hash fails the assertion);
+    it makes the column non-nullable, so Catalyst infers no
+    ``isnotnull(<check>)`` join filter that it would push through the
+    semi-join onto every row of the seen-side scan."""
+    h = F.col(hash64_col)
+    ok = F.assert_true(h == F.xxhash64(url_col), f"{hash64_col} != xxhash64({url_col})")
+    return df.withColumn(hash64_col, F.coalesce(ok, h, F.lit(0)))
+
+
+def confirm_anti_join(
+    candidates: DataFrame,
+    seen: DataFrame | None,
+    maybe_seen: Column | None,
+    url_col: str = "url",
+    hash64_col: str = "url_hash64",
+) -> DataFrame:
+    """Exact ``candidates LEFT ANTI seen`` behind a membership prefilter.
+
+    ``maybe_seen`` is a boolean Column over the candidates with no false
+    negatives (a bloom or cuckoo probe, marked nondeterministic). With it
+    and ``hash64_col`` on both sides, the confirm is:
+
+        hits = seen ⋉ broadcast(hash64 of maybe_seen candidates)
+        new  = candidates ▷ broadcast(hits)     on [hash64, url]
+
+    The seen side is scanned once in the JVM and never shuffled or sent
+    through Python; both broadcast build sides are O(prefilter-positive
+    candidates of one round), the first only 8-byte hashes. Exact: a
+    candidate in the seen set is prefilter-positive, so its seen row is a
+    hit; the url is in the anti-join key, so a hash collision never drops
+    a distinct URL. The ``hash64 == xxhash64(url)`` precondition this
+    relies on is asserted on the candidates and the hits.
+
+    Without a prefilter, or when the seen side has no hash column, this is
+    the plain anti-join (keyed on [hash64, url] when both sides carry the
+    hash: SMJ compares fixed-width longs first and the url only on a tie).
+    """
+    if seen is None:
+        return candidates
+    keyed = hash64_col in candidates.columns and hash64_col in seen.columns
+    join_key = [hash64_col, url_col] if keyed else [url_col]
+    if maybe_seen is None or not keyed:
+        return candidates.join(seen.select(*join_key), join_key, "left_anti")
+    cand = _hash_checked(candidates, url_col, hash64_col)
+    probe = cand.filter(maybe_seen).select(hash64_col)
+    hits = _hash_checked(
+        seen.select(*join_key).join(F.broadcast(probe), hash64_col, "left_semi"),
+        url_col, hash64_col,
+    )
+    return cand.join(F.broadcast(hits), join_key, "left_anti")
 
 
 def seen_anti_join(
@@ -179,55 +243,16 @@ def seen_anti_join(
     url_col: str = "url",
     hash64_col: str = "url_hash64",
 ) -> DataFrame:
-    """Keep candidates NOT in the seen set (F2/J1).
-
-    With a bloom: bloom-negative rows bypass the shuffle entirely, and the
-    exact confirm of the (steady-state tiny: true-dups + fpp) bloom-positive
-    remainder is join-reshaped so the SEEN side is only scanned, never
-    shuffled:
-
-        hits = seen ⋉ maybe   (left_semi — build side is the small maybe)
-        new  = maybe ▷ hits   (left_anti — build side is the tiny hit set)
-
-    A direct ``maybe LEFT ANTI seen`` would be forced to shuffle the full
-    seen set every round (anti/semi joins can only build on the RIGHT, and
-    seen is the right side there) — O(frontier) shuffle per round, ~1.2 GB
-    at a 20M-URL frontier and fatal at 10^10. In the reshaped form both
-    joins build on maybe-sized inputs (AQE picks broadcast at runtime from
-    actual sizes; if maybe degenerates to huge — saturated bloom — AQE
-    falls back to SMJ and the cost matches the naive plan). Without a
-    bloom: plain exact ``left_anti``. Result is identical in every path
-    (property-tested); only the shuffled volume differs.
+    """Keep candidates NOT in the seen set (F2/J1): ``confirm_anti_join``
+    with the bloom probe as its prefilter (plain exact anti-join without a
+    bloom). Result is identical in every path (property-tested); only the
+    scanned, broadcast and shuffled volumes differ.
 
     Precondition: ``hash64_col`` must equal ``xxhash64(url_col)`` on both
-    sides (as ``with_url_keys`` attaches it). The bloom is probed on that
-    column and the join key leads with it, so a row whose hash disagrees
-    with its url is silently treated as unseen — the result is then no
-    longer the url-only anti-join.
+    sides (as ``with_url_keys`` attaches it). With a bloom the job fails
+    on a candidate or hit row that breaks it.
     """
-    if seen is None:
-        return candidates
-    # Key layout: when BOTH sides carry the 64-bit key, join on
-    # [hash64, url] with the hash FIRST — SMJ sorts/compares fixed-width
-    # longs and only falls through to the string on a hash tie, and the
-    # result is exactly the url-only anti-join (url equality is still in
-    # the key). Falls back to the url-only key when the seen side has no
-    # hash column (external callers).
-    if hash64_col in candidates.columns and hash64_col in seen.columns:
-        join_key = [hash64_col, url_col]
-    else:
-        join_key = [url_col]
-    seen_keys = seen.select(*join_key)
-    if bloom is None:
-        return candidates.join(seen_keys, join_key, "left_anti")
-    spark = candidates.sparkSession
-    flagged = candidates.withColumn(
-        "__maybe_seen", might_contain_col(spark, bloom, hash64_col)
-    )
-    definite_new = flagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
-    maybe = flagged.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-    hits = seen_keys.join(
-        maybe.select(*join_key).distinct(), join_key, "left_semi"
-    )
-    confirmed_new = maybe.join(hits, join_key, "left_anti")
-    return definite_new.unionByName(confirmed_new)
+    maybe_seen = None
+    if bloom is not None and seen is not None:
+        maybe_seen = might_contain_col(candidates.sparkSession, bloom, hash64_col)
+    return confirm_anti_join(candidates, seen, maybe_seen, url_col, hash64_col)

@@ -44,11 +44,15 @@ now structural:
   item count outgrows capacity (amortized, geometric growth) and when a
   process without the carried bloom resumes (one segment over the
   checkpointed frontier's ``url_hash64``, bit-identical to the carry).
-- The seen-set anti-join is bloom-prefiltered: steady-state discovered
-  links are mostly bloom-negative (no shuffle) or true-seen (dropped).
-- The fetch join is an equi-join on the doc key — at production scale the
-  docs side is the fetched-content store, bucketed on the same key, so the
-  join is shuffle-free on one side; in sandbox it broadcast-joins.
+- **Every per-round Python UDF and shuffle is O(round).** The fetch cuts
+  the docs corpus to the round's doc_ids with a broadcast ``left_semi``
+  (build side O(admitted)) before link extraction, so canonicalization
+  runs on the fetched docs' links only. The seen-set confirm broadcasts
+  the bloom-positive candidates' 8-byte ``url_hash64`` into a
+  ``left_semi`` probe of the frontier scan, then anti-joins the candidates
+  against those hits, broadcast too (both build sides O(bloom-positive
+  candidates of one round)): the frontier is scanned once per round by the
+  JVM, never shuffled and never sent through Python (operators/seen.py).
 """
 
 from __future__ import annotations
@@ -334,14 +338,21 @@ class CrawlEngine:
         n_docs = self.cfg.n_docs or docs.count()
         # S3 fetch: deterministic URL -> doc mapping (crc32, reproducible in
         # the pure-Python oracle); production swaps this join for the
-        # vectorized HTTP-fetch UDF.
+        # vectorized HTTP-fetch UDF. The docs are cut to the round's doc_ids
+        # (broadcast left_semi, build side O(admitted)) BEFORE link
+        # extraction, so posexplode and canonicalization see only the
+        # fetched docs, never the whole corpus.
         targets = scheduled.select(
             "url", "discovery_ts", "seq",
             F.format_string(
                 "doc-%08d", F.pmod(F.crc32(F.col("url")), F.lit(n_docs))
             ).alias("doc_id"),
         )
-        links = extract_links(docs)  # (doc_id, span_pos, raw_url) in span order
+        fetched_docs = docs.join(
+            F.broadcast(targets.select("doc_id")), "doc_id", "left_semi"
+        )
+        # (doc_id, span_pos, raw_url) in span order
+        links = extract_links(fetched_docs)
         raw = targets.join(links, "doc_id", "inner").select(
             F.col("raw_url").alias("url"),
             F.lit(0).alias("priority"),

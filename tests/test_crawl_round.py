@@ -4,6 +4,8 @@ equivalence after a mid-round kill, and parallelism invariance."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -307,3 +309,103 @@ def test_bloom_is_maintained_incrementally(spark, tmp_path):
     assert {(m["m"], m["k"]) for m in metas} == {(metas[0]["m"], metas[0]["k"])}
     assert set(metas[-1]) == {"round", "m", "k", "items", "capacity"}
     assert not os.path.exists(os.path.join(str(root), "blobs"))
+
+
+def _plan_nodes(plan: str) -> list[tuple[int, str]]:
+    """(depth, node) per line of the final adaptive plan of a tree string,
+    codegen stage markers stripped."""
+    final = plan.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+    nodes = []
+    for line in final.splitlines():
+        node = line.lstrip(" :+-")
+        if node:
+            nodes.append((len(line) - len(node), re.sub(r"^\*\(\d+\) ", "", node)))
+    return nodes
+
+
+def _is_join(node: str) -> bool:
+    return node.split(" ", 1)[0].endswith("Join")
+
+
+def _path_up(nodes: list[tuple[int, str]], i: int, stop) -> list[str]:
+    """Nodes from ``nodes[i]`` up through its ancestors to the first one
+    matching ``stop`` (inclusive)."""
+    path, depth = [nodes[i][1]], nodes[i][0]
+    for d, node in reversed(nodes[:i]):
+        if d < depth:
+            path.append(node)
+            depth = d
+            if stop(node):
+                break
+    return path
+
+
+def test_engine_round_plan_is_o_round(spark, tmp_path):
+    """Plan audit on the engine's own round (not a registry query): in the
+    executed plan of the frame the round appends to the frontier,
+    - the frontier scan feeding the seen confirm reaches its join with no
+      Exchange, Python UDF or hash check in between (scanned once by the
+      JVM, never shuffled, probed in Python or rehashed);
+    - the docs scan is cut by the round's doc_ids (LeftSemi) before any
+      Python UDF, so canonicalization sees only the fetched docs.
+    Half the docs' links are seeded, so round 0's confirm has true hits and
+    AQE cannot prune it away as empty."""
+    import pandas as pd
+
+    from delphi_crawler_spark.datagen import SEED_SCHEMA
+    from delphi_crawler_spark.plans.crawl_round import FRONTIER
+
+    seeds = gen_seed_urls(n=N_SEEDS)
+    linked = [
+        s["text"]
+        for row in gen_docs(n=N_DOCS).itertuples()
+        if int(row.doc_id[4:]) % 2 == 0
+        for s in row.spans if s["kind"] == "link"
+    ]
+    extra = pd.DataFrame({
+        "url": linked,
+        "priority": 0,
+        "discovery_ts": seeds["discovery_ts"].max() + pd.to_timedelta(
+            range(1, len(linked) + 1), unit="s"),
+        "seq": range(N_SEEDS, N_SEEDS + len(linked)),
+    }).astype(seeds.dtypes.to_dict())
+    docs_path = str(tmp_path / "docs")
+    docs_df(spark, n=N_DOCS).write.parquet(docs_path)
+
+    eng = CrawlEngine(
+        spark, str(tmp_path / "store_plan"),
+        politeness=politeness_df(spark), robots=robots_df(spark),
+        config=CrawlConfig(round_ms=ROUND_MS, n_docs=N_DOCS),
+    )
+    eng.bootstrap(spark.createDataFrame(pd.concat([seeds, extra]), schema=SEED_SCHEMA))
+    plans = []
+    real_append = eng.store.append
+
+    def append(table, df, *args, **kwargs):
+        out = real_append(table, df, *args, **kwargs)
+        if table == FRONTIER:  # read while the round's cached stages live
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    eng.store.append = append
+    stats = eng.run_round(0, docs=spark.read.parquet(docs_path))
+    assert stats["new_links"] > 0 and len(plans) == 1
+    nodes = _plan_nodes(plans[0])
+
+    frontier = [i for i, (_, n) in enumerate(nodes)
+                if re.match(r"FileScan parquet \[url#\d+,url_hash64#\d+L", n)]
+    assert len(frontier) == 1, plans[0]
+    path = _path_up(nodes, frontier[0], _is_join)
+    assert _is_join(path[-1]), path
+    assert not any("Exchange" in n or "ShuffleQueryStage" in n or "ArrowEvalPython" in n
+                   for n in path), path
+    # the url_hash64 == xxhash64(url) check runs on the hits, never on
+    # every frontier row
+    assert not any("xxhash64" in n for n in path), path
+
+    docs_scans = [i for i, (_, n) in enumerate(nodes)
+                  if re.match(r"FileScan parquet \[doc_id#\d+,spans#\d+\]", n)]
+    assert docs_scans, plans[0]
+    for i in docs_scans:
+        path = _path_up(nodes, i, lambda n: "LeftSemi" in n or "ArrowEvalPython" in n)
+        assert "LeftSemi" in path[-1], path

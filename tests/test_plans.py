@@ -183,9 +183,10 @@ def test_unicode_normalize_arrow_not_per_row(spark):
 
 def test_seen_confirm_builds_on_maybe_not_seen(spark):
     """The bloom-positive exact confirm must never shuffle the seen side:
-    reshaped as seen ⋉ maybe (LeftSemi) then maybe ▷ hits (LeftAnti), both
-    builds are maybe-sized. A SortMergeJoin anti/semi here would mean the
-    O(frontier) shuffle regressed."""
+    seen ⋉ broadcast(maybe hashes) (LeftSemi) then candidates ▷
+    broadcast(hits) (LeftAnti), both builds maybe-sized. A SortMergeJoin
+    anti/semi here would mean the O(frontier) shuffle regressed. The
+    engine's own round is audited in test_crawl_round.py."""
     df = E.q_j1_seen_anti_join_bloom(spark, SF)
     plan = _plan(df)
     assert "LeftSemi" in plan  # the reshape marker
