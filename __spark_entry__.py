@@ -564,20 +564,20 @@ def q_a1_group_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_a3_nested_calls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: nested per-doc calls shaping (reference createLibraryMap,
     ElasticCallGraphActor.scala:75-85), flattened to a canonical string for
-    the oracle compare."""
+    the oracle compare (entries sorted as strings, like the oracle's)."""
+    from delphi_crawler_spark.operators.aggs import nested_library_doc
+
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 == 0).select(
         F.concat(F.lit("D"), F.col("l_orderkey")).alias("src_doc"),
         F.concat(F.lit("S"), F.col("l_suppkey")).alias("library"),
         F.concat(F.lit("P"), F.col("l_partkey")).alias("method"),
     )
-    per_lib = li.groupBy("src_doc", "library").agg(
-        F.array_sort(F.array_distinct(F.collect_list("method"))).alias("methods")
+    entries = F.transform(
+        "calls",
+        lambda c: F.concat(c["name"], F.lit(":"), F.array_join(c["methods"], "|")),
     )
-    entry_str = F.concat(F.col("library"), F.lit(":"), F.array_join("methods", "|"))
-    return (
-        per_lib.select("src_doc", entry_str.alias("e"))
-        .groupBy("src_doc")
-        .agg(F.array_join(F.array_sort(F.collect_list("e")), ";").alias("calls_str"))
+    return nested_library_doc(li).select(
+        "src_doc", F.array_join(F.array_sort(entries), ";").alias("calls_str")
     )
 
 
@@ -802,76 +802,6 @@ def q_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 # Relational analytics (scan/filter/join/agg parity demos)
 # =====================================================================
-
-
-def q_tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style pricing summary: predicate pushdown to parquet, one
-    hash aggregate, exact decimal arithmetic cast to double at the end."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
-    )
-    disc_price = _dec("l_extendedprice", 12) * (F.lit(1).cast("decimal(3,2)") - _dec("l_discount", 4))
-    charge = disc_price * (F.lit(1).cast("decimal(3,2)") + _dec("l_tax", 4))
-    out = li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
-        F.sum(_dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-        F.sum(disc_price).cast("double").alias("sum_disc_price"),
-        F.sum(charge).cast("double").alias("sum_charge"),
-        F.count(F.lit(1)).alias("count_order"),
-    )
-    return out.withColumn(
-        "avg_qty", F.col("sum_qty") / F.col("count_order")
-    ).withColumn("avg_price", F.col("sum_base_price") / F.col("count_order"))
-
-
-def q_tpch_q3_topk_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-style: broadcast dim join → fact join → exact-decimal revenue
-    → deterministic top-10 (revenue desc, orderkey tiebreak)."""
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    revenue = _dec("l_extendedprice", 12) * (F.lit(1).cast("decimal(3,2)") - _dec("l_discount", 4))
-    joined = (
-        li.join(F.broadcast(orders.join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-    )
-    agg = joined.groupBy("o_orderkey").agg(F.sum(revenue).cast("double").alias("revenue"))
-    return (
-        agg.orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
-        .limit(10)
-        .select(F.col("o_orderkey").cast(BIG).alias("o_orderkey"), "revenue")
-    )
-
-
-def q_tpch_q5_multijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-style six-way join: region → nation → customer/supplier →
-    orders → lineitem, dims broadcast, exact-decimal revenue per nation."""
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    revenue = _dec("l_extendedprice", 12) * (F.lit(1).cast("decimal(3,2)") - _dec("l_discount", 4))
-    dims = (
-        nation.join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
-        .join(cust, F.col("c_nationkey") == F.col("n_nationkey"))
-    )
-    j = (
-        li.join(orders.select("o_orderkey", "o_custkey"),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(dims.select("c_custkey", "n_name", "n_nationkey")),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(supp), (F.col("l_suppkey") == F.col("s_suppkey"))
-              & (F.col("s_nationkey") == F.col("n_nationkey")))
-    )
-    return (
-        j.groupBy("n_name")
-        .agg(F.sum(revenue).cast("double").alias("revenue"),
-             F.count(F.lit(1)).alias("n_items"))
-    )
 
 
 def q_agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1328,51 +1258,6 @@ def q_corpus_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.col("n_tokens").cast(BIG).alias("n_tokens"),
         F.col("cum_tokens").cast(BIG).alias("cum_tokens"),
-    )
-
-
-def q_evt_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inactivity-gap sessionization of the event log (30-min gap): one
-    shuffle on the key; lag + running-sum share a single (key, ts) sort."""
-    _ensure_pkg(spark)
-    from delphi_crawler_spark.operators.events import sessionize
-
-    ev = _t(spark, sf_dir, "events")
-    out = sessionize(ev, gap_seconds=1800)
-    return out.select(
-        F.col("user_id").cast(BIG).alias("user_id"),
-        F.col("session_no").cast(BIG).alias("session_no"),
-        "session_start",
-        "session_end",
-        F.col("n_events").cast(BIG).alias("n_events"),
-        F.round("total_value", 6).alias("total_value"),
-    )
-
-
-def q_evt_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of (point-in-time) join: each click gets the most recent view of
-    the same user at or before it. Union-and-carry — one key shuffle, no
-    range join; right (key, ts) ties collapsed for determinism (DuckDB
-    ASOF JOIN is the oracle)."""
-    _ensure_pkg(spark)
-    from delphi_crawler_spark.operators.events import asof_join
-
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts", "event_id"
-    )
-    out = asof_join(
-        clicks, views, key_col="user_id", ts_col="ts",
-        right_payload=["event_id", "ts"],
-    )
-    return out.select(
-        F.col("event_id").cast(BIG).alias("event_id"),
-        F.col("user_id").cast(BIG).alias("user_id"),
-        F.col("event_id_r").cast(BIG).alias("view_event_id"),
-        F.col("ts_r").alias("view_ts"),
     )
 
 
@@ -4246,19 +4131,6 @@ def q_store_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compaction_plan(manifest, target_bytes=1_000_000)
 
 
-def q_evt_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel (view → click → purchase within 72 h): per-step
-    filtered min-aggs joined on the shared user key — no per-user sort,
-    no UDF. Epoch-microsecond outputs keep it engine-exact."""
-    _ensure_pkg(spark)
-    from delphi_crawler_spark.operators.events import funnel_steps
-
-    ev = _t(spark, sf_dir, "events")
-    return funnel_steps(
-        ev, steps=["view", "click", "purchase"], window_s=72 * 3600
-    )
-
-
 def q_store_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zone-map file-skipping effectiveness, clustered vs append-order
     layout over the same 500-file manifest: range predicates prune
@@ -4460,36 +4332,6 @@ def q_corpus_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curriculum_order(docs)
 
 
-def q_evt_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention matrix: users grouped by first-activity week,
-    per (cohort_week, week_offset) the fraction of the cohort active —
-    two keyed hash-aggs sharing the user grain plus one broadcast-sized
-    cohort join."""
-    _ensure_pkg(spark)
-    ev = _t(spark, sf_dir, "events")
-    wk = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp_ltz")) / F.lit(604800000000)
-    ).cast("bigint")
-    act = ev.select(F.col("user_id").alias("user_id"), wk.alias("week")).distinct()
-    cohort = act.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
-    sizes = cohort.groupBy("cohort_week").agg(
-        F.count(F.lit(1)).alias("cohort_size")
-    )
-    joined = act.join(cohort, "user_id").select(
-        "cohort_week", (F.col("week") - F.col("cohort_week")).alias("week_offset")
-    )
-    ret = joined.groupBy("cohort_week", "week_offset").agg(
-        F.count(F.lit(1)).alias("n_active")
-    )
-    return ret.join(sizes, "cohort_week").select(
-        "cohort_week",
-        "week_offset",
-        F.col("n_active").cast(BIG).alias("n_active"),
-        F.col("cohort_size").cast(BIG).alias("cohort_size"),
-        F.round(F.col("n_active") / F.col("cohort_size"), 6).alias("retention"),
-    )
-
-
 def _dust_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared synthetic page space of the DUST family (c1e + fold)."""
     docs = _t(spark, sf_dir, "documents")
@@ -4566,29 +4408,6 @@ def q_r12_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     return host_trend_slope(act)
-
-
-def q_evt_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dense daily series per key: zero-fill the gaps inside each key's
-    own [min_day, max_day] span (in-cell sequence explode + left join) —
-    silence must read as 0 for trend fits and dashboards."""
-    _ensure_pkg(spark)
-    from delphi_crawler_spark.operators.events import gapfill_daily
-
-    ev = _t(spark, sf_dir, "events")
-    day = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp_ltz")) / F.lit(86400000000)
-    ).cast("bigint")
-    series = (
-        ev.filter(F.col("event_id") % 5 == 0)
-        .select(
-            F.concat(F.lit("u"), (F.col("user_id") % 40).cast("string")).alias("key"),
-            day.alias("day"),
-        )
-        .groupBy("key", "day")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return gapfill_daily(series)
 
 
 def q_shard_consistent_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4857,31 +4676,6 @@ def q_corpus_heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return heaps_curve(docs, n_buckets=10, gram=2)
 
 
-def q_evt_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host daily anomaly detection composed over the gapfilled
-    series: z-score vs the trailing 7 days (current day excluded),
-    zero-filled silence counted. One (key, day) window frame."""
-    _ensure_pkg(spark)
-    from delphi_crawler_spark.operators.events import (
-        daily_anomaly_zscore,
-        gapfill_daily,
-    )
-
-    ev = _t(spark, sf_dir, "events")
-    day = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp_ltz")) / F.lit(86400000000)
-    ).cast("bigint")
-    series = (
-        ev.select(
-            F.concat(F.lit("u"), (F.col("user_id") % 30).cast("string")).alias("key"),
-            day.alias("day"),
-        )
-        .groupBy("key", "day")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return daily_anomaly_zscore(gapfill_daily(series))
-
-
 def q_corpus_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc OOV rate + type/token ratio vs the corpus's own top-40
     terms (deterministic: count desc, term asc): the tokenizer-fit
@@ -5009,34 +4803,6 @@ def q_store_bloom_file_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bloom_probe_stats(
         blooms, orders, probes, "file_id", "k", bits=16384, n_files=16
     )
-
-
-def q_evt_distinct_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 7-day trailing distinct-actives curve (WAU): dedup to
-    (user, day) pairs, in-cell window fan-out of the deduped pair table,
-    one (day, user) dedup + day hash-agg — the exact oracle form of the
-    HLL sketch path."""
-    _ensure_pkg(spark)
-    from delphi_crawler_spark.operators.events import sliding_distinct_daily
-
-    ev = _t(spark, sf_dir, "events")
-    day = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp_ltz")) / F.lit(86400000000)
-    ).cast("bigint")
-    return sliding_distinct_daily(
-        ev.select(F.col("user_id"), day.alias("day")), "user_id", "day", 7
-    )
-
-
-def q_evt_bot_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inter-arrival regularity bot detection: per-user CV of event gaps
-    with decimal(38,0)-exact moment sums; metronomic keys (CV < 0.1 over
-    >= 5 gaps) flag. One keyed window sort + one key hash-agg."""
-    _ensure_pkg(spark)
-    from delphi_crawler_spark.operators.events import interarrival_bot_signals
-
-    ev = _t(spark, sf_dir, "events")
-    return interarrival_bot_signals(ev, "user_id", "ts", "event_id")
 
 
 def q_store_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5389,18 +5155,6 @@ def q_agg_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return distribution_drift(a, b, "value", ndigits=2)
 
 
-def q_evt_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 first-5-event journeys per user: rank filter before any
-    path assembly, rank-ordered fold (array_sort on (rn,type) structs),
-    path table window bounded by the type alphabet. Deterministic
-    lexicographic tie-break."""
-    _ensure_pkg(spark)
-    from delphi_crawler_spark.operators.events import top_event_paths
-
-    ev = _t(spark, sf_dir, "events")
-    return top_event_paths(ev, "user_id", "ts", "event_type", "event_id")
-
-
 def q_store_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE-style column profile of orders (exact NDV, null fraction,
     string min/max, avg serialized length) — one single-pass wide
@@ -5482,30 +5236,6 @@ def q_r16_sitemap_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     sitemap = docs.filter(d % 3 != 1).select(url.alias("url"))
     crawled = docs.filter(d % 4 != 2).select(url.alias("url"))
     return sitemap_coverage(sitemap, crawled)
-
-
-def q_evt_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stickiness curve (DAU/WAU): the 1-day and 7-day exact distinct
-    curves from the same dedup-then-fan-out shape, joined on day —
-    the engagement scalar product dashboards track."""
-    _ensure_pkg(spark)
-    from delphi_crawler_spark.operators.events import sliding_distinct_daily
-
-    ev = _t(spark, sf_dir, "events")
-    day = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp_ltz")) / F.lit(86400000000)
-    ).cast("bigint")
-    base = ev.select(F.col("user_id"), day.alias("day"))
-    wau = sliding_distinct_daily(base, "user_id", "day", 7).select(
-        "day",
-        F.col("n_active").alias("dau"),
-        F.col("n_active_window").alias("wau"),
-    )
-    return wau.select(
-        "day", "dau", "wau",
-        F.round(F.col("dau").cast("double") / F.col("wau").cast("double"), 6)
-        .alias("stickiness"),
-    )
 
 
 def q_sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5650,28 +5380,6 @@ def q_text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         c["ttr"].alias("ttr"),
         c["mattr"].alias("mattr"),
     )
-
-
-def q_evt_concurrency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concurrent-session profile: sessionize (30-min gap) then the
-    key_overlap_depth sweep line over session [start,end] second
-    intervals — peak simultaneous sessions per time segment, the
-    capacity-planning curve. Reuses both operators unchanged."""
-    _ensure_pkg(spark)
-    from delphi_crawler_spark.operators.events import sessionize
-    from delphi_crawler_spark.storage.zorder import key_overlap_depth
-
-    ev = _t(spark, sf_dir, "events")
-    ses = sessionize(ev, gap_seconds=1800)
-    iv = ses.select(
-        F.concat(
-            F.col("user_id").cast("string"), F.lit("#"),
-            F.col("session_no").cast("string"),
-        ).alias("file_id"),
-        F.unix_seconds(F.col("session_start").cast("timestamp_ltz")).alias("min_key"),
-        F.unix_seconds(F.col("session_end").cast("timestamp_ltz")).alias("max_key"),
-    )
-    return key_overlap_depth(iv)
 
 
 def q_g8_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5921,18 +5629,6 @@ def q_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     return weighted_quantile_by_group(rows, "host", "v", "w", q=0.5)
 
 
-def q_evt_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM engagement grid over users (recency/frequency/monetary
-    quintiles with deterministic tie-broken NTILEs over the key table) —
-    the same grid ranks hosts by yield in a crawl. One key hash-agg +
-    three metadata-sized windows."""
-    _ensure_pkg(spark)
-    from delphi_crawler_spark.operators.events import rfm_segments
-
-    ev = _t(spark, sf_dir, "events")
-    return rfm_segments(ev, now_us=1_700_000_000_000_000)
-
-
 def q_store_ttl_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-TTL maintenance plan: per file, expired-row share and the
     merge-on-read vs copy-on-write decision (delete vector under 30%
@@ -5978,47 +5674,6 @@ def q_c1g_url_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         c["n_params"].alias("n_params"),
         c["digit_share"].alias("digit_share"),
         c["low_value_flag"].alias("low_value_flag"),
-    )
-
-
-def q_evt_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holt linear smoothing over the gapfilled per-key daily series
-    (evt_gapfill's input): level/trend fold in day order, 1-day and
-    7-day projections — the per-host volume forecast a scheduler sizes
-    tomorrow's round with. Sequential recurrence as one in-cell fold."""
-    _ensure_pkg(spark)
-    from delphi_crawler_spark.operators.events import gapfill_daily, holt_forecast
-
-    ev = _t(spark, sf_dir, "events")
-    day = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp_ltz")) / F.lit(86400000000)
-    ).cast("bigint")
-    series = (
-        ev.filter(F.col("event_id") % 5 == 0)
-        .select(
-            F.concat(F.lit("u"), (F.col("user_id") % 40).cast("string")).alias("key"),
-            day.alias("day"),
-        )
-        .groupBy("key", "day")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    dense = gapfill_daily(series)
-    return holt_forecast(dense, "key", "day", "n", alpha=0.5, beta=0.3)
-
-
-def q_evt_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Growth accounting: daily actives split into first-ever-day NEW vs
-    RETURNING keys (host-discovery reading: new vs revisited domains per
-    round). First-occurrence min(day) per key + shared-grain day agg."""
-    _ensure_pkg(spark)
-    from delphi_crawler_spark.operators.events import new_vs_returning_daily
-
-    ev = _t(spark, sf_dir, "events")
-    day = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp_ltz")) / F.lit(86400000000)
-    ).cast("bigint")
-    return new_vs_returning_daily(
-        ev.select(F.col("user_id"), day.alias("day")), "user_id", "day"
     )
 
 
@@ -6115,15 +5770,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_vocab_coverage": q_corpus_vocab_coverage,
         "g3_kcore": q_g3_kcore,
         "r11_http_cache_plan": q_r11_http_cache_plan,
-        "evt_funnel": q_evt_funnel,
         "mm_span_integrity": q_mm_span_integrity,
         "g4_triangles": q_g4_triangles,
         "text_winnow_fingerprints": q_text_winnow_fingerprints,
         "dedup_winnow_pairs": q_dedup_winnow_pairs,
         "corpus_curriculum_order": q_corpus_curriculum_order,
-        "evt_retention": q_evt_retention,
         "r12_trend_slope": q_r12_trend_slope,
-        "evt_gapfill": q_evt_gapfill,
         "shard_consistent_hash": q_shard_consistent_hash,
         "p26_burn_rate": q_p26_burn_rate,
         "mm_pack_interleaved": q_mm_pack_interleaved,
@@ -6132,11 +5784,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "s13_wet_records": q_s13_wet_records,
         "g5_bowtie": q_g5_bowtie,
         "corpus_heaps_curve": q_corpus_heaps_curve,
-        "evt_anomaly_zscore": q_evt_anomaly_zscore,
         "text_readability": q_text_readability,
         "corpus_zipf_fit": q_corpus_zipf_fit,
-        "evt_distinct_sliding": q_evt_distinct_sliding,
-        "evt_bot_detect": q_evt_bot_detect,
         "text_lm_kneser_ney": q_text_lm_kneser_ney,
         "g6_graph_stats": q_g6_graph_stats,
         "agg_gini_skew": q_agg_gini_skew,
@@ -6149,15 +5798,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_lsh_eval": q_dedup_lsh_eval,
         "r15_change_periodicity": q_r15_change_periodicity,
         "agg_drift_report": q_agg_drift_report,
-        "evt_top_paths": q_evt_top_paths,
         "g7_random_walks": q_g7_random_walks,
         "s15_frontier_merge": q_s15_frontier_merge,
         "r16_sitemap_coverage": q_r16_sitemap_coverage,
-        "evt_stickiness": q_evt_stickiness,
         "f6g_robots_drift": q_f6g_robots_drift,
         "text_script_profile": q_text_script_profile,
         "text_lexical_diversity": q_text_lexical_diversity,
-        "evt_concurrency_profile": q_evt_concurrency_profile,
         "g8_modularity": q_g8_modularity,
         "c1f_host_alias_fold": q_c1f_host_alias_fold,
         "text_compression_ratio": q_text_compression_ratio,
@@ -6167,10 +5813,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "r17_host_summary": q_r17_host_summary,
         "corpus_pack_efficiency": q_corpus_pack_efficiency,
         "agg_weighted_median": q_agg_weighted_median,
-        "evt_rfm_segments": q_evt_rfm_segments,
         "c1g_url_features": q_c1g_url_features,
-        "evt_holt_forecast": q_evt_holt_forecast,
-        "evt_new_vs_returning": q_evt_new_vs_returning,
         "text_code_detect": q_text_code_detect,
         # --- below: driver-confirmed green in rounds 1-4 (unchanged) ---
         "p7_host_backoff": q_p7_host_backoff,
@@ -6248,9 +5891,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "c5_prop_interpolation": q_c5_prop_interpolation,
         "a5_partition_metrics": q_a5_partition_metrics,
         "agg_distinct_metrics": q_agg_distinct_metrics,
-        "tpch_q1_pricing_summary": q_tpch_q1_pricing_summary,
-        "tpch_q3_topk_revenue": q_tpch_q3_topk_revenue,
-        "tpch_q5_multijoin": q_tpch_q5_multijoin,
         "agg_having": q_agg_having,
         "p1b_politeness_perhost": q_p1b_politeness_perhost,
         "dedup_exact_text": q_dedup_exact_text,
@@ -6270,8 +5910,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_segment_dedup": q_corpus_segment_dedup,
         "corpus_repetition_signals": q_corpus_repetition_signals,
         "corpus_stratified_sample": q_corpus_stratified_sample,
-        "evt_sessionize": q_evt_sessionize,
-        "evt_asof_join": q_evt_asof_join,
     }
 
 
@@ -7457,44 +7095,6 @@ SELECT date_trunc('hour', ts) AS window_start, event_type, count(*) AS n,
 FROM events GROUP BY 1, 2
 """
 
-    o["tpch_q1_pricing_summary"] = """
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS sum_disc_price,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))) * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(4,2)))) AS DOUBLE) AS sum_charge,
-       count(*) AS count_order,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_price
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-    o["tpch_q3_topk_revenue"] = """
-SELECT l_orderkey::BIGINT AS o_orderkey,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING' AND o_orderdate < TIMESTAMP '1998-01-01'
-GROUP BY l_orderkey
-ORDER BY revenue DESC, o_orderkey ASC LIMIT 10
-"""
-
-    o["tpch_q5_multijoin"] = """
-SELECT n_name,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue,
-       count(*) AS n_items
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = n_nationkey
-WHERE r_name = 'ASIA'
-GROUP BY n_name
-"""
-
     o["p1b_politeness_perhost"] = """
 WITH fr AS (SELECT 'u' || user_id AS host, 1.0 + user_id % 5 AS rate, user_id % 3 + 1 AS burst,
                    (event_id % 3)::BIGINT AS priority, ts, event_id::BIGINT AS seq
@@ -7672,36 +7272,6 @@ c AS (
 )
 SELECT doc_id::BIGINT AS doc_id, lang, n_tokens, cum_tokens::BIGINT AS cum_tokens
 FROM c WHERE cum_tokens - n_tokens < 3000
-"""
-
-    o["evt_sessionize"] = """
-WITH o AS (
-  SELECT user_id, event_id, ts, value,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR ts - lag(ts) OVER w > INTERVAL 1800 SECOND
-              THEN 1 ELSE 0 END AS brk
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-s AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_no
-  FROM o
-)
-SELECT user_id::BIGINT AS user_id, session_no::BIGINT AS session_no,
-       min(ts) AS session_start, max(ts) AS session_end,
-       count(*)::BIGINT AS n_events, round(sum(value), 6) AS total_value
-FROM s GROUP BY user_id, session_no
-"""
-
-    o["evt_asof_join"] = """
-SELECT c.event_id::BIGINT AS event_id, c.user_id::BIGINT AS user_id,
-       v.event_id::BIGINT AS view_event_id, v.ts AS view_ts
-FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') c
-ASOF LEFT JOIN (
-  SELECT user_id, ts, max(event_id) AS event_id
-  FROM events WHERE event_type = 'view' GROUP BY user_id, ts
-) v ON c.user_id = v.user_id AND c.ts >= v.ts
 """
 
     o["r5_change_rate"] = """
@@ -9411,37 +8981,6 @@ SELECT part, file_id, size_bytes, is_candidate,
 FROM w
 """
 
-    o["evt_funnel"] = """
-WITH base AS (
-  SELECT user_id, event_type AS t, epoch_us(ts) AS us FROM events),
-users AS (SELECT DISTINCT user_id FROM base),
-s1 AS (
-  SELECT user_id, MIN(us) AS step1_us FROM base WHERE t = 'view'
-  GROUP BY user_id),
-s2 AS (
-  SELECT b.user_id, MIN(b.us) AS step2_us
-  FROM base b JOIN s1 ON b.user_id = s1.user_id
-  WHERE b.t = 'click' AND b.us > s1.step1_us
-    AND b.us <= s1.step1_us + 259200000000
-  GROUP BY b.user_id),
-s3 AS (
-  SELECT b.user_id, MIN(b.us) AS step3_us
-  FROM base b JOIN s1 ON b.user_id = s1.user_id
-              JOIN s2 ON b.user_id = s2.user_id
-  WHERE b.t = 'purchase' AND b.us > s2.step2_us
-    AND b.us <= s1.step1_us + 259200000000
-  GROUP BY b.user_id)
-SELECT u.user_id, s1.step1_us, s2.step2_us, s3.step3_us,
-       (CASE WHEN s3.step3_us IS NOT NULL THEN 3
-             WHEN s2.step2_us IS NOT NULL THEN 2
-             WHEN s1.step1_us IS NOT NULL THEN 1
-             ELSE 0 END)::INT AS step_reached
-FROM users u
-LEFT JOIN s1 ON u.user_id = s1.user_id
-LEFT JOIN s2 ON u.user_id = s2.user_id
-LEFT JOIN s3 ON u.user_id = s3.user_id
-"""
-
     o["store_prune_stats"] = """
 WITH man AS (
   SELECT 'clustered' AS layout, 'f' || doc_id AS file_id,
@@ -9600,26 +9139,6 @@ SELECT doc_id, tier, shuffle_key,
 FROM d
 """
 
-    o["evt_retention"] = """
-WITH act AS (
-  SELECT DISTINCT user_id,
-         FLOOR(epoch_us(ts) / 604800000000)::BIGINT AS week
-  FROM events),
-cohort AS (
-  SELECT user_id, MIN(week) AS cohort_week FROM act GROUP BY user_id),
-sizes AS (
-  SELECT cohort_week, COUNT(*)::BIGINT AS cohort_size
-  FROM cohort GROUP BY cohort_week),
-ret AS (
-  SELECT c.cohort_week, a.week - c.cohort_week AS week_offset,
-         COUNT(*)::BIGINT AS n_active
-  FROM act a JOIN cohort c ON a.user_id = c.user_id
-  GROUP BY c.cohort_week, a.week - c.cohort_week)
-SELECT r.cohort_week, r.week_offset, r.n_active, s.cohort_size,
-       ROUND(r.n_active / s.cohort_size, 6) AS retention
-FROM ret r JOIN sizes s ON r.cohort_week = s.cohort_week
-"""
-
     # DUST closed loop: the c1e evidence oracle is the rules CTE; folded
     # URLs drop the params marked irrelevant for that host (names sorted
     # id < sess < utm, matching the map_entries sort).
@@ -9674,20 +9193,6 @@ SELECT host, n_days,
              THEN (n_days * sxy - sx * sy) / (n_days * sxx - sx * sx)
              ELSE 0.0 END) > 0 AS rising
 FROM agg
-"""
-
-    o["evt_gapfill"] = """
-WITH series AS (
-  SELECT 'u' || (user_id % 40) AS key,
-         FLOOR(epoch_us(ts) / 86400000000)::BIGINT AS day,
-         COUNT(*)::BIGINT AS n
-  FROM events WHERE event_id % 5 = 0 GROUP BY 1, 2),
-spans AS (
-  SELECT key, MIN(day) AS d0, MAX(day) AS d1 FROM series GROUP BY key),
-dense AS (
-  SELECT key, unnest(range(d0, d1 + 1)) AS day FROM spans)
-SELECT d.key, d.day::BIGINT AS day, COALESCE(s.n, 0)::BIGINT AS n
-FROM dense d LEFT JOIN series s ON d.key = s.key AND d.day = s.day
 """
 
     # Ring generated in-SQL with the same md5 rule as the operator's
@@ -9984,38 +9489,6 @@ SELECT bucket, n_tokens, n_new_grams,
 FROM j
 """
 
-    o["evt_anomaly_zscore"] = """
-WITH series AS (
-  SELECT 'u' || (user_id % 30) AS key,
-         FLOOR(epoch_us(ts) / 86400000000)::BIGINT AS day,
-         COUNT(*)::BIGINT AS n
-  FROM events GROUP BY 1, 2),
-spans AS (SELECT key, MIN(day) AS d0, MAX(day) AS d1 FROM series GROUP BY key),
-grid AS (
-  SELECT key, unnest(range(d0, d1 + 1)) AS day FROM spans),
-dense AS (
-  SELECT g.key, g.day::BIGINT AS day, COALESCE(se.n, 0)::BIGINT AS n
-  FROM grid g LEFT JOIN series se ON se.key = g.key AND se.day = g.day),
-z AS (
-  SELECT key, day, n,
-         COUNT(*) OVER w AS hist_n,
-         AVG(n::DOUBLE) OVER w AS mean,
-         AVG((n::DOUBLE) * (n::DOUBLE)) OVER w
-           - AVG(n::DOUBLE) OVER w * AVG(n::DOUBLE) OVER w AS var
-  FROM dense
-  WINDOW w AS (PARTITION BY key ORDER BY day
-               ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING))
-SELECT key, day, n,
-       ROUND(mean, 6) AS hist_mean,
-       ROUND(SQRT(GREATEST(var, 0.0)), 6) AS hist_std,
-       ROUND(CASE WHEN SQRT(GREATEST(var, 0.0)) > 0
-                  THEN (n - mean) / SQRT(GREATEST(var, 0.0)) END, 6) AS zscore,
-       hist_n >= 5 AND (CASE WHEN SQRT(GREATEST(var, 0.0)) > 0
-                             THEN ABS((n - mean) / SQRT(GREATEST(var, 0.0))) > 3.0
-                             ELSE n <> mean END) AS anomaly
-FROM z
-"""
-
     o["text_readability"] = """
 WITH t AS (
   SELECT doc_id::BIGINT AS doc_id,
@@ -10151,47 +9624,6 @@ SELECT pk.probe_key,
        (16 - COALESCE(ms.n_files_maybe, 0))::BIGINT AS n_files_skipped
 FROM pk LEFT JOIN ms ON ms.probe_key = pk.probe_key
         LEFT JOIN ts ON ts.probe_key = pk.probe_key
-"""
-
-    o["evt_distinct_sliding"] = """
-WITH pairs AS (
-  SELECT DISTINCT user_id AS key,
-         FLOOR(epoch_us(ts) / 86400000000)::BIGINT AS day
-  FROM events WHERE user_id IS NOT NULL),
-span AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM pairs),
-daily AS (SELECT day, COUNT(*)::BIGINT AS n_active FROM pairs GROUP BY day),
-cov AS (
-  SELECT DISTINCT key, unnest(range(day, day + 7)) AS day FROM pairs),
-win AS (SELECT day::BIGINT AS day, COUNT(*)::BIGINT AS n_active_window
-        FROM cov GROUP BY day)
-SELECT w.day, COALESCE(d.n_active, 0)::BIGINT AS n_active, w.n_active_window
-FROM win w CROSS JOIN span s LEFT JOIN daily d ON d.day = w.day
-WHERE w.day BETWEEN s.d0 AND s.d1
-"""
-
-    o["evt_bot_detect"] = """
-WITH g AS (
-  SELECT user_id AS key,
-         epoch_us(ts) - LAG(epoch_us(ts)) OVER
-           (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-  FROM events),
-a AS (
-  SELECT key, COUNT(*)::BIGINT AS n_events, COUNT(gap)::BIGINT AS n_gaps,
-         SUM(gap::DECIMAL(38,0)) AS sg,
-         SUM(gap::DECIMAL(19,0) * gap::DECIMAL(19,0)) AS sgg
-  FROM g GROUP BY key)
-SELECT key AS user_id, n_events, n_gaps,
-  CASE WHEN n_gaps > 0
-       THEN FLOOR(sg::DOUBLE / n_gaps + 0.5) / 1e6 END AS mean_gap_s,
-  CASE WHEN n_gaps >= 5 AND sg::DOUBLE / n_gaps > 0 THEN ROUND(
-    SQRT(GREATEST(sgg::DOUBLE / n_gaps
-                  - (sg::DOUBLE / n_gaps) * (sg::DOUBLE / n_gaps), 0.0))
-    / (sg::DOUBLE / n_gaps), 6) END AS cv_gap,
-  (n_gaps >= 5 AND sg::DOUBLE / n_gaps > 0 AND ROUND(
-    SQRT(GREATEST(sgg::DOUBLE / n_gaps
-                  - (sg::DOUBLE / n_gaps) * (sg::DOUBLE / n_gaps), 0.0))
-    / (sg::DOUBLE / n_gaps), 6) < 0.1) AS is_bot
-FROM a
 """
 
     o["store_orphan_files"] = """
@@ -10637,26 +10069,6 @@ SELECT MAX(n_a) AS n_a, MAX(n_b) AS n_b, MAX(n_buckets) AS n_buckets,
 FROM s
 """
 
-    o["evt_top_paths"] = """
-WITH r AS (
-  SELECT user_id AS key, event_type AS t,
-         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS rn
-  FROM events),
-p AS (
-  SELECT key, string_agg(t, '>' ORDER BY rn) AS path
-  FROM r WHERE rn <= 5 GROUP BY key),
-c AS (SELECT path, COUNT(*)::BIGINT AS n_keys FROM p GROUP BY path),
-t AS (SELECT COUNT(*)::BIGINT AS total FROM p),
-k AS (
-  SELECT path, n_keys,
-         ROW_NUMBER() OVER (ORDER BY n_keys DESC, path ASC) AS rank
-  FROM c)
-SELECT rank::BIGINT AS rank, path, n_keys,
-       ROUND(n_keys::DOUBLE / t.total::DOUBLE, 6) AS share
-FROM k CROSS JOIN t WHERE rank <= 20
-"""
-
     o["store_table_stats"] = """
 WITH base AS (
   SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders),
@@ -10768,24 +10180,6 @@ SELECT url, in_sitemap, in_crawl,
             WHEN in_sitemap THEN 'sitemap_only'
             ELSE 'crawled_only' END AS status
 FROM j
-"""
-
-    o["evt_stickiness"] = """
-WITH pairs AS (
-  SELECT DISTINCT user_id AS key,
-         FLOOR(epoch_us(ts) / 86400000000)::BIGINT AS day
-  FROM events WHERE user_id IS NOT NULL),
-span AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM pairs),
-daily AS (SELECT day, COUNT(*)::BIGINT AS n_active FROM pairs GROUP BY day),
-cov AS (SELECT DISTINCT key, unnest(range(day, day + 7)) AS day FROM pairs),
-win AS (SELECT day::BIGINT AS day, COUNT(*)::BIGINT AS n_active_window
-        FROM cov GROUP BY day)
-SELECT w.day, COALESCE(d.n_active, 0)::BIGINT AS dau,
-       w.n_active_window AS wau,
-       ROUND(COALESCE(d.n_active, 0)::DOUBLE / w.n_active_window::DOUBLE, 6)
-         AS stickiness
-FROM win w CROSS JOIN span s LEFT JOIN daily d ON d.day = w.day
-WHERE w.day BETWEEN s.d0 AND s.d1
 """
 
     o["f6g_robots_drift"] = """
@@ -10930,43 +10324,6 @@ SELECT doc_id, n::BIGINT AS n_tokens, ttr,
          / (n - 49)::DOUBLE, 6)
        ELSE ttr END AS mattr
 FROM b
-"""
-
-    o["evt_concurrency_profile"] = """
-WITH ses AS (
-
-WITH o AS (
-  SELECT user_id, event_id, ts, value,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR ts - lag(ts) OVER w > INTERVAL 1800 SECOND
-              THEN 1 ELSE 0 END AS brk
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-s AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_no
-  FROM o
-)
-SELECT user_id::BIGINT AS user_id, session_no::BIGINT AS session_no,
-       min(ts) AS session_start, max(ts) AS session_end,
-       count(*)::BIGINT AS n_events, round(sum(value), 6) AS total_value
-FROM s GROUP BY user_id, session_no
-
-),
-iv AS (
-  SELECT (epoch_us(session_start) // 1000000)::BIGINT AS mn,
-         (epoch_us(session_end) // 1000000)::BIGINT AS mx
-  FROM ses),
-ev2 AS (
-  SELECT pos, SUM(d) AS dd FROM (
-    SELECT mn AS pos, 1 AS d FROM iv
-    UNION ALL SELECT mx + 1, -1 FROM iv) GROUP BY pos)
-SELECT pos,
-       LEAD(pos) OVER (ORDER BY pos) AS next_pos,
-       (SUM(dd) OVER (ORDER BY pos
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT AS depth
-FROM ev2
 """
 
     o["g8_modularity"] = """
@@ -11266,30 +10623,6 @@ SELECT host, n_rows, ROUND(tw, 6) AS total_weight,
 FROM sc
 """
 
-    o["evt_rfm_segments"] = """
-WITH a AS (
-  SELECT user_id AS key, MAX(epoch_us(ts)) AS last_us,
-         COUNT(*)::BIGINT AS frequency,
-         ROUND(SUM(value), 6) AS monetary
-  FROM events GROUP BY user_id),
-b AS (
-  SELECT key,
-         ROUND((1700000000000000 - last_us) / 86400000000.0, 6)
-           AS recency_days,
-         frequency, monetary
-  FROM a),
-t AS (
-  SELECT key, recency_days, frequency, monetary,
-         NTILE(5) OVER (ORDER BY recency_days DESC, key ASC) AS r,
-         NTILE(5) OVER (ORDER BY frequency ASC, key ASC) AS f,
-         NTILE(5) OVER (ORDER BY monetary ASC, key ASC) AS m
-  FROM b)
-SELECT key AS user_id, recency_days, frequency, monetary,
-       r::BIGINT AS r, f::BIGINT AS f, m::BIGINT AS m,
-       r::VARCHAR || f::VARCHAR || m::VARCHAR AS segment
-FROM t
-"""
-
     o["store_ttl_plan"] = """
 WITH r AS (
   SELECT (doc_id % 25)::BIGINT AS file_id,
@@ -11341,62 +10674,6 @@ SELECT doc_id, url, url_len, path_depth, n_params, digit_share,
        (path_depth > 6 OR n_params > 4 OR digit_share > 0.4
         OR url_len > 200) AS low_value_flag
 FROM g
-"""
-
-    o["evt_holt_forecast"] = """
-WITH series AS (
-  SELECT 'u' || (user_id % 40) AS key,
-         FLOOR(epoch_us(ts) / 86400000000)::BIGINT AS day,
-         COUNT(*)::BIGINT AS n
-  FROM events WHERE event_id % 5 = 0 GROUP BY 1, 2),
-spans AS (
-  SELECT key, MIN(day) AS d0, MAX(day) AS d1 FROM series GROUP BY key),
-dense AS (
-  SELECT sp.key, g.day::BIGINT AS day
-  FROM spans sp, unnest(range(sp.d0, sp.d1 + 1)) g(day)),
-dn AS (
-  SELECT d.key, d.day, COALESCE(s.n, 0)::DOUBLE AS x
-  FROM dense d LEFT JOIN series s ON d.key = s.key AND d.day = s.day),
-arr AS (
-  SELECT key, list_transform(
-           list_sort(list({'d': day, 'x': x})), s -> s.x) AS vals
-  FROM dn GROUP BY key),
-st AS (
-  SELECT key, len(vals)::BIGINT AS n_days,
-         CASE WHEN len(vals) >= 2 THEN
-           list_reduce(
-             list_prepend(
-               [vals[2]::DOUBLE, (vals[2] - vals[1])::DOUBLE],
-               list_transform(vals[3:], x -> [x::DOUBLE, 0.0::DOUBLE])),
-             (acc, e) -> [
-               0.5 * e[1] + 0.5 * (acc[1] + acc[2]),
-               0.3 * ((0.5 * e[1] + 0.5 * (acc[1] + acc[2])) - acc[1])
-               + 0.7 * acc[2]])
-         END AS fs
-  FROM arr)
-SELECT key, n_days,
-       CASE WHEN n_days >= 2 THEN ROUND(fs[1], 6) END AS level,
-       CASE WHEN n_days >= 2 THEN ROUND(fs[2], 6) END AS trend,
-       CASE WHEN n_days >= 2 THEN ROUND(fs[1] + fs[2], 6) END AS forecast_1d,
-       CASE WHEN n_days >= 2 THEN ROUND(fs[1] + 7.0 * fs[2], 6) END
-         AS forecast_7d
-FROM st
-"""
-
-    o["evt_new_vs_returning"] = """
-WITH pairs AS (
-  SELECT DISTINCT user_id AS key,
-         FLOOR(epoch_us(ts) / 86400000000)::BIGINT AS day
-  FROM events WHERE user_id IS NOT NULL),
-fd AS (SELECT key, MIN(day) AS first_day FROM pairs GROUP BY key),
-j AS (SELECT p.key, p.day, f.first_day
-      FROM pairs p JOIN fd f ON f.key = p.key)
-SELECT day, COUNT(*)::BIGINT AS n_active,
-       SUM((day = first_day)::INT)::BIGINT AS n_new,
-       (COUNT(*) - SUM((day = first_day)::INT))::BIGINT AS n_returning,
-       ROUND(SUM((day = first_day)::INT)::DOUBLE / COUNT(*)::DOUBLE, 6)
-         AS new_share
-FROM j GROUP BY day
 """
 
     return o

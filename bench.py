@@ -498,18 +498,6 @@ def watermark_audit_2m(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sliding_distinct_2m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 7-day WAU curve over 2M (user, day) activity rows (200k
-    users, 90 days): dedup-then-fan-out, never a per-day sort."""
-    from delphi_crawler_spark.operators.events import sliding_distinct_daily
-
-    d = spark.range(FRONTIER_N).select(
-        F.pmod(F.xxhash64("id"), F.lit(200_000)).alias("user_id"),
-        F.pmod(F.xxhash64(F.col("id") + 3), F.lit(90)).alias("day"),
-    )
-    return sliding_distinct_daily(d, "user_id", "day", 7)
-
-
 def bloom_file_index_2m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom file index build + probe over 2M keys in 64 hash files
     (64 KiB filters), 1000 point probes."""
@@ -545,8 +533,6 @@ BENCH_QUERIES = {
     "seen_anti_join_bloom": E.q_j1_seen_anti_join_bloom,
     "politeness_token_bucket": E.q_p1_politeness_token_bucket,
     "first_occurrence_dedup": E.q_f1_first_occurrence_dedup,
-    "tpch_q1_pricing_summary": E.q_tpch_q1_pricing_summary,
-    "tpch_q3_topk_revenue": E.q_tpch_q3_topk_revenue,
     "minhash_lsh_dedup": E.q_dedup_minhash_lsh,
     "simhash_neardup": E.q_dedup_simhash,
     "ivf_topk": E.q_sim_ivf_topk,
@@ -580,7 +566,6 @@ BENCH_QUERIES = {
     "gini_skew": gini_skew_2m,
     "drain_eta": drain_eta_2m,
     "watermark_audit": watermark_audit_2m,
-    "sliding_distinct": sliding_distinct_2m,
     "bloom_file_index": bloom_file_index_2m,
     "kneser_ney": E.q_text_lm_kneser_ney,
     "random_walks": random_walks_2m,

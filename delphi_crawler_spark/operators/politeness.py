@@ -598,7 +598,7 @@ def age_boosted_priority(
     """
     disc = (
         # NTZ parquet timestamps: LTZ cast under the engine's pinned UTC
-        # session tz is value-preserving (same idiom as events.sessionize)
+        # session tz is value-preserving
         F.unix_millis(F.col("discovery_ts").cast("timestamp_ltz"))
         if ts_unit == "ts"
         else F.col("discovery_ts").cast("long")

@@ -13,8 +13,6 @@ Two tiers, per the scale doctrine:
   lists -> the scan touches nlist/nprobe of the data. Centroid assignment
   is a broadcast of (nlist x dim) floats; no shuffle on the corpus beyond
   the partition-local scoring.
-- ``lsh_bucket_udf`` — random-hyperplane sign buckets shared with
-  embedding near-dup.
 """
 
 from __future__ import annotations
@@ -23,7 +21,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType
+from pyspark.sql.types import ArrayType, IntegerType, LongType
 
 
 def cosine_col(a: Column, b: Column) -> Column:
@@ -234,27 +232,6 @@ def lsh_band_buckets_udf(spark: SparkSession, bands: int, planes_per_band: int, 
         return pd.Series(list(vals))
 
     return _buckets
-
-
-def lsh_bucket_udf(spark: SparkSession, n_planes: int, seed: int, dim: int | None = None):
-    """Random-hyperplane sign-bucket: bucket = bits of sign(V @ P^T).
-    Planes are generated lazily at first batch from the row width (or
-    ``dim``), seeded — deterministic across executors."""
-    state: dict = {}
-
-    @F.pandas_udf(LongType())
-    def _bucket(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.map(np.asarray).to_list()).astype(np.float64)
-        planes = state.get("planes")
-        if planes is None:
-            rng = np.random.default_rng(seed)
-            planes = rng.standard_normal((n_planes, m.shape[1]))
-            state["planes"] = planes
-        bits = (m @ planes.T) > 0
-        vals = (bits * (1 << np.arange(n_planes))).sum(1).astype(np.int64)
-        return pd.Series(vals)
-
-    return _bucket
 
 
 def random_projection(

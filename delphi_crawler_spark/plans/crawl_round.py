@@ -96,6 +96,33 @@ FRONTIER_COLS = [
 ]
 
 
+def candidate_urls(
+    raw: DataFrame, robots: DataFrame | None, order: list[str]
+) -> DataFrame:
+    """The admission chain every URL source shares (seeds, discovered
+    links, streamed seed batches): canonicalize -> drop malformed ->
+    scheduling keys -> robots gate -> F1 first occurrence by ``order``.
+
+    Only the scheduling keys (``host``, ``url_hash64``) attach pre-dedup:
+    the F1 min_by struct and the seen anti-join carry every attached
+    column through their exchanges, so the frontier-append-only keys
+    (``host_rev``, murmur3 ``url_hash``) attach AFTER the survivors are
+    known. ``host`` served the robots gate and is shed before the F1
+    exchange (a pure regexp of url). Callers restore all three with
+    ``complete_url_keys`` on the survivors — after the seen anti-join
+    when there is one — an O(new) narrow projection instead of
+    O(candidates) shuffled strings.
+
+    The operators are looked up as this module's globals at call time,
+    so a wrapper installed on them here sees every caller."""
+    cand = raw.withColumn("url", canonicalize_url("url")).filter(
+        F.col("url").isNotNull()
+    )
+    cand = with_url_keys(cand, minimal=True)
+    cand = robots_filter(cand, robots)
+    return first_occurrence_dedup(cand.drop("host"), key="url", order=order)
+
+
 @dataclass
 class CrawlConfig:
     round_ms: int = 10_000
@@ -195,15 +222,7 @@ class CrawlEngine:
         migrate_if_needed(self.store)
         if self.store.exists(FRONTIER):
             return
-        cand = seeds.withColumn("url", canonicalize_url("url")).filter(
-            F.col("url").isNotNull()
-        )
-        # scheduling keys only pre-dedup; append keys attach on survivors
-        cand = with_url_keys(cand, minimal=True)
-        cand = robots_filter(cand, self.robots)
-        cand = cand.drop("host")  # shed before the F1 exchange (see _discover)
-        cand = first_occurrence_dedup(cand, key="url", order=["seq"])
-        cand = complete_url_keys(cand)
+        cand = complete_url_keys(candidate_urls(seeds, self.robots, ["seq"]))
         frontier = cand.select(
             "url", "url_hash", "url_hash64", "host", "host_rev",
             "priority", "discovery_ts", "seq",
@@ -361,21 +380,8 @@ class CrawlEngine:
             "span_pos",
         )
 
-        cand = raw.withColumn("url", canonicalize_url("url")).filter(
-            F.col("url").isNotNull()
-        )
-        # scheduling keys only (host, url_hash64) pre-dedup: the F1 min_by
-        # struct and the anti-join carry every attached column through
-        # their exchanges, so the frontier-append-only keys (host_rev,
-        # murmur3) attach AFTER the survivors are known — O(new) narrow
-        # compute instead of O(candidates) shuffled strings
-        cand = with_url_keys(cand, minimal=True)
-        cand = robots_filter(cand, self.robots)
-        # host served the robots gate; shed it before the F1 exchange (a
-        # pure regexp of url, restored on survivors by complete_url_keys)
-        cand = cand.drop("host")
         # F1: first occurrence in discovery order (parent emission, span pos)
-        cand = first_occurrence_dedup(cand, key="url", order=["parent_seq", "span_pos"])
+        cand = candidate_urls(raw, self.robots, ["parent_seq", "span_pos"])
 
         seen = self.store.read(FRONTIER).select("url", "url_hash64")
         bloom = self._load_bloom(bloom_meta)

@@ -191,27 +191,21 @@ class TableStore:
             raise FileNotFoundError(f"table {table!r} has no committed manifest")
         return self._read_manifest(table, mani)
 
-    def _read_paths(self, table: str, paths: list[str]) -> DataFrame:
-        # parts may be dir-partitioned (key=value subdirs). Spark's multi-
-        # path partition discovery refuses sibling partitioned roots
-        # (CONFLICTING_DIRECTORY_STRUCTURES), so each immutable part is its
-        # own self-consistent scan and the table view is their union — the
-        # manifest-of-parts read plan. Predicate pushdown and partition
-        # pruning apply per branch; compaction keeps the branch count O(1).
-        frames = [self.spark.read.parquet(p) for p in paths]
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f, allowMissingColumns=True)
-        return out
-
-    def read(self, table: str) -> DataFrame:
-        """Current-table scan. Parts written through the hidden-partition
-        spec path (``append_bucketed``) drop their physical bucket column
+    def _scan(self, table: str, parts: list[dict]) -> DataFrame:
+        """Union of the given part entries — every reader's scan plan.
+        Parts may be dir-partitioned (key=value subdirs). Spark's multi-
+        path partition discovery refuses sibling partitioned roots
+        (CONFLICTING_DIRECTORY_STRUCTURES), so each immutable part is its
+        own self-consistent scan and the table view is their union — the
+        manifest-of-parts read plan. Predicate pushdown and partition
+        pruning apply per branch; compaction keeps the branch count O(1).
+        A part written through the hidden-partition spec path
+        (``append_bucketed``) drops its recorded physical bucket column
         here, so the logical schema is spec-independent — the Iceberg
         hidden-partitioning contract that makes ``set_partition_spec``
         evolution invisible to readers."""
         frames = []
-        for p in self.parts(table):
+        for p in parts:
             f = self.spark.read.parquet(os.path.join(self._tdir(table), p["path"]))
             sp = p.get("spec")
             if sp and sp["name"] in f.columns:
@@ -222,14 +216,16 @@ class TableStore:
             out = out.unionByName(f, allowMissingColumns=True)
         return out
 
+    def read(self, table: str) -> DataFrame:
+        """Current-table scan (logical schema, see ``_scan``)."""
+        return self._scan(table, self.parts(table))
+
     # -------------------------------------------- partition-spec evolution
     @staticmethod
     def _spec_bucket(spec: dict, expr):
         """The spec's transform: bucket(n) = pmod(xxhash64(col), n) — the
         same JVM hash at write and prune time, foldable over literals so
         prune filters constant-fold into partition pruning."""
-        from pyspark.sql import functions as F
-
         return F.pmod(F.xxhash64(expr), F.lit(spec["buckets"])).cast("int")
 
     def partition_spec(self, table: str) -> dict | None:
@@ -266,13 +262,26 @@ class TableStore:
             raise ValueError(
                 f"table {table!r} has no partition spec; call set_partition_spec first"
             )
-        from pyspark.sql import functions as F
+        entry = self._write_spec_part(table, df, spec, round_no)
+        return self._commit(table, self.parts(table) + [entry])
 
+    def _write_spec_part(
+        self,
+        table: str,
+        df: DataFrame,
+        spec: dict,
+        round_no: int | None,
+        partition_by: list[str] | None = None,
+    ) -> dict:
+        """Write ``df`` as one part hive-partitioned by ``spec``'s bucket
+        column and return its manifest entry, which records the spec."""
         dfb = df.withColumn(spec["name"], self._spec_bucket(spec, F.col(spec["col"])))
-        part = self._write_part(table, dfb, partition_by=[spec["name"]])
+        part = self._write_part(
+            table, dfb, partition_by=[spec["name"], *(partition_by or [])]
+        )
         entry = self._part_entry(table, part, round_no)
         entry["spec"] = spec
-        return self._commit(table, self.parts(table) + [entry])
+        return entry
 
     def prune_read(self, table: str, value) -> DataFrame:
         """Point-lookup scan with per-part spec-aware pruning (Iceberg
@@ -284,8 +293,6 @@ class TableStore:
         row-group pushdown still applies). At 10^10 rows this turns a
         frontier host lookup into O(files-in-one-bucket) per part instead
         of O(table)."""
-        from pyspark.sql import functions as F
-
         frames = []
         key_col = None
         for p in self.parts(table):
@@ -310,26 +317,21 @@ class TableStore:
         """Scan only the parts tagged with ``round_no`` — manifest-level
         partition pruning (O(that round's data), used for incremental bloom
         maintenance)."""
-        paths = [
-            os.path.join(self._tdir(table), p["path"])
-            for p in self.parts(table)
-            if p.get("round") == round_no
-        ]
-        if not paths:
+        parts = [p for p in self.parts(table) if p.get("round") == round_no]
+        if not parts:
             return self.read(table).limit(0)
-        return self._read_paths(table, paths)
+        return self._scan(table, parts)
 
     def read_parts_range(self, table: str, lo_round: int, hi_round: int) -> DataFrame:
         """Scan the parts tagged with any round in [lo_round, hi_round].
         Same manifest-level pruning as ``read_parts``."""
-        paths = [
-            os.path.join(self._tdir(table), p["path"])
-            for p in self.parts(table)
+        parts = [
+            p for p in self.parts(table)
             if p.get("round") is not None and lo_round <= p["round"] <= hi_round
         ]
-        if not paths:
+        if not parts:
             return self.read(table).limit(0)
-        return self._read_paths(table, paths)
+        return self._scan(table, parts)
 
     def write_snapshot(
         self,
@@ -408,8 +410,11 @@ class TableStore:
         ``rewrite_data_files`` binpack). Parts already >= target and parts
         whose round tag is in ``protect_rounds`` (rounds that may still be
         re-run/pruned by ``replace_round``/``read_parts``) are untouched.
-        A merged part gets ``round=None``. Returns the new manifest id, or
-        None if nothing needed merging.
+        A merged part gets ``round=None``. On a table with a partition
+        spec, a merged part is written and recorded under the CURRENT spec
+        (its inputs may span spec evolutions), so it stays prunable by
+        ``prune_read``. Returns the new manifest id, or None if nothing
+        needed merging.
 
         Amortization: a part produced at target size is never rewritten
         again, so every byte is rewritten O(target_bytes / part_bytes)
@@ -434,16 +439,20 @@ class TableStore:
             cur.append(p)
             cur_b += b
         groups.append(cur)
+        spec = self._current_spec(table)
         merged_away: list[str] = []
         new_entries: list[dict] = []
         for g in groups:
             if len(g) < 2:
                 continue
-            df = self._read_paths(
-                table, [os.path.join(self._tdir(table), p["path"]) for p in g]
-            )
-            newp = self._write_part(table, df, partition_by=partition_by)
-            new_entries.append(self._part_entry(table, newp, None))
+            df = self._scan(table, g)
+            if spec:
+                new_entries.append(
+                    self._write_spec_part(table, df, spec, None, partition_by)
+                )
+            else:
+                newp = self._write_part(table, df, partition_by=partition_by)
+                new_entries.append(self._part_entry(table, newp, None))
             merged_away.extend(p["path"] for p in g)
         if not new_entries:
             return None
@@ -589,11 +598,7 @@ class TableStore:
         ``read``. Raises FileNotFoundError once ``expire`` has dropped it."""
         if not os.path.isfile(os.path.join(self._tdir(table), mani)):
             raise FileNotFoundError(f"manifest {mani!r} of {table!r} not found")
-        paths = [
-            os.path.join(self._tdir(table), p["path"])
-            for p in self._read_manifest(table, mani)
-        ]
-        return self._read_paths(table, paths)
+        return self._scan(table, self._read_manifest(table, mani))
 
     def read_between(self, table: str, from_mani: str, to_mani: str) -> DataFrame:
         """Incremental scan (Iceberg incremental-read analogue): only the
@@ -610,15 +615,11 @@ class TableStore:
                 raise FileNotFoundError(f"manifest {m!r} of {table!r} not found")
         old = {p["path"] for p in self._read_manifest(table, from_mani)}
         new_parts = [
-            p["path"]
-            for p in self._read_manifest(table, to_mani)
-            if p["path"] not in old
+            p for p in self._read_manifest(table, to_mani) if p["path"] not in old
         ]
         if not new_parts:
             return self.read_at(table, to_mani).limit(0)
-        return self._read_paths(
-            table, [os.path.join(self._tdir(table), p) for p in new_parts]
-        )
+        return self._scan(table, new_parts)
 
     def restore(self, table: str, mani: str) -> None:
         """Roll the table's pointer back to an earlier manifest (Iceberg

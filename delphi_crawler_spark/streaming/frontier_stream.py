@@ -57,27 +57,19 @@ def schedule_batch(
     robots: DataFrame | None = None,
     round_ms: int = 10_000,
 ) -> DataFrame:
-    """One micro-batch through the scheduling core — the SAME operator
-    composition the batch engine runs (plan parity is what makes the
-    streaming façade honest)."""
-    from delphi_crawler_spark.functions.canonicalize import (
-        canonicalize_url,
-        with_url_keys,
-    )
-    from delphi_crawler_spark.operators.dedup import first_occurrence_dedup
+    """One micro-batch through the scheduling core — the engine's own
+    admission chain (``crawl_round.candidate_urls``, as ``bootstrap``
+    runs it on seeds) then politeness slots and round admission (plan
+    parity is what makes the streaming façade honest)."""
+    from delphi_crawler_spark.functions.canonicalize import complete_url_keys
     from delphi_crawler_spark.operators.politeness import (
         admit_round,
         assign_emission_slots,
         emission_order,
     )
-    from delphi_crawler_spark.operators.robots import robots_filter
+    from delphi_crawler_spark.plans.crawl_round import candidate_urls
 
-    cand = batch.withColumn("url", canonicalize_url("url")).filter(
-        F.col("url").isNotNull()
-    )
-    cand = with_url_keys(cand)
-    cand = robots_filter(cand, robots)
-    cand = first_occurrence_dedup(cand, key="url", order=["seq"])
+    cand = complete_url_keys(candidate_urls(batch, robots, ["seq"]))
     slotted = assign_emission_slots(cand, politeness)
     return emission_order(admit_round(slotted, round_ms)).select(
         "emit_ms", "host", "priority", "discovery_ts", "seq", "url"
@@ -172,15 +164,13 @@ def session_metrics(
     ts_col: str = "ts",
     value_col: str = "value",
 ) -> DataFrame:
-    """Event-time SESSION windows via Spark's native ``session_window`` —
-    the Structured Streaming twin of ``operators/events.sessionize``:
+    """Event-time SESSION windows via Spark's native ``session_window``:
     dynamic-length windows that merge while consecutive events arrive within
     ``gap``, with watermarked state eviction so a perpetual stream holds
-    only open sessions. Boundary note: ``session_window`` closes at
-    ``last_ts + gap`` exclusive (an event exactly ``gap`` later starts a new
-    session) while the batch operator's lag-rule keeps it (strictly-greater
-    breaks); identical for any data without exact-boundary gaps — the
-    parity test pins that equivalence."""
+    only open sessions. ``session_window`` closes at ``last_ts + gap``
+    exclusive (an event exactly ``gap`` later starts a new session). The
+    same function runs on a batch frame; the parity test pins stream ==
+    batch."""
     return (
         events.withWatermark(ts_col, watermark)
         .groupBy(F.col(key_col), F.session_window(ts_col, gap).alias("w"))

@@ -12,6 +12,7 @@ Iceberg ``rewrite_data_files`` (binpack) + ``expire_snapshots``.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -421,3 +422,48 @@ def test_partition_spec_survives_unrelated_commits(spark, tmp_path):
     store.append(t, df.withColumn("seq", F.lit(2)))  # plain append, no spec path
     assert store.partition_spec(t) == {"col": "host", "buckets": 4, "name": "host_b4"}
     assert store.read(t).count() == 2
+
+
+def test_compact_keeps_partition_spec_hidden_and_prunable(spark, tmp_path):
+    """compact() across a spec evolution (bucket(host, 4), then
+    bucket(host, 8)): no physical bucket column reaches read(),
+    read_parts() or read_at(); each merged part is written and recorded
+    under the table's current spec, so prune_read still prunes it; the
+    rows never change."""
+    store = TableStore(spark, str(tmp_path / "specs4"))
+    t = "tbl"
+
+    def rows(lo):
+        return spark.createDataFrame(
+            [(f"h{i % 10}", i) for i in range(lo, lo + 50)], "host: string, seq: long"
+        )
+
+    def pruned_on(bucket_col):
+        plan = store.prune_read(t, "h3")._jdf.queryExecution().executedPlan().toString()
+        return re.search(r"PartitionFilters: \[[^\]]*\b" + bucket_col + "#", plan)
+
+    store.set_partition_spec(t, "host", 4)
+    store.append_bucketed(t, rows(0), round_no=1)
+    store.append_bucketed(t, rows(50), round_no=2)
+    assert store.read_parts(t, 1).columns == ["host", "seq"]
+    assert store.read_parts_range(t, 1, 2).columns == ["host", "seq"]
+    mani_b4 = store.current_snapshot(t)
+
+    assert store.compact(t, target_bytes=1 << 30) is not None
+    (merged,) = store.parts(t)
+    assert merged["spec"] == {"col": "host", "buckets": 4, "name": "host_b4"}
+    assert store.read(t).columns == ["host", "seq"]
+    assert store.read_at(t, mani_b4).columns == ["host", "seq"]
+    assert pruned_on("host_b4")
+
+    store.set_partition_spec(t, "host", 8)
+    store.append_bucketed(t, rows(100), round_no=3)
+    before = sorted(map(tuple, store.read(t).collect()))
+    assert store.compact(t, target_bytes=1 << 30) is not None
+    (merged,) = store.parts(t)
+    assert merged["spec"] == store.partition_spec(t)
+    assert store.read(t).columns == ["host", "seq"]
+    assert sorted(map(tuple, store.read(t).collect())) == before
+    assert pruned_on("host_b8") and not pruned_on("host_b4")
+    got = sorted(r["seq"] for r in store.prune_read(t, "h3").collect())
+    assert got == [i for i in range(150) if i % 10 == 3]

@@ -543,74 +543,6 @@ def test_delete_cuckoo_df_partition_sized(spark):
 
 
 # ------------------------------------------------------------ event operators
-def test_sessionize_crafted(spark):
-    """Gap-rule semantics: strictly-greater-than-gap starts a new session."""
-    import datetime as dt
-    from delphi_crawler_spark.operators.events import sessionize
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        # user 1: events at 0s, 1799s (same session), 3600s (new session)
-        (1, 1, t0, 1.0),
-        (2, 1, t0 + dt.timedelta(seconds=1799), 2.0),
-        (3, 1, t0 + dt.timedelta(seconds=3600), 4.0),
-        # user 2: single event
-        (4, 2, t0, 8.0),
-    ]
-    ev = spark.createDataFrame(rows, "event_id long, user_id long, ts timestamp, value double")
-    out = {(r.user_id, r.session_no): r for r in sessionize(ev, gap_seconds=1800).collect()}
-    assert out[(1, 1)].n_events == 2 and out[(1, 1)].total_value == 3.0
-    assert out[(1, 2)].n_events == 1 and out[(1, 2)].total_value == 4.0
-    assert out[(2, 1)].n_events == 1
-    assert len(out) == 3
-    # boundary: exactly gap seconds apart stays in the same session
-    assert out[(1, 1)].session_end - out[(1, 1)].session_start == dt.timedelta(seconds=1799)
-
-
-def test_asof_join_matches_pandas_reference(spark):
-    """Union-and-carry as-of join equals a per-key merge_asof; inclusive at
-    equal timestamps; NULL when no right row precedes."""
-    import datetime as dt
-    from delphi_crawler_spark.operators.events import asof_join
-
-    rng = np.random.default_rng(3)
-    t0 = dt.datetime(2024, 1, 1)
-    n = 600
-    left = pd.DataFrame(
-        {
-            "event_id": np.arange(n),
-            "user_id": rng.integers(0, 20, n),
-            "ts": [t0 + dt.timedelta(seconds=int(s)) for s in rng.integers(0, 5000, n)],
-        }
-    )
-    right = pd.DataFrame(
-        {
-            "user_id": rng.integers(0, 20, n // 2),
-            "ts": [t0 + dt.timedelta(seconds=int(s)) for s in rng.integers(0, 5000, n // 2)],
-            "event_id": np.arange(10_000, 10_000 + n // 2),
-        }
-    )
-    out = asof_join(
-        spark.createDataFrame(left),
-        spark.createDataFrame(right),
-        key_col="user_id",
-        ts_col="ts",
-        right_payload=["event_id", "ts"],
-    ).collect()
-    got = {r.event_id: r.event_id_r for r in out}
-    # reference: collapse right ties to max event_id, then merge_asof per key
-    r2 = right.groupby(["user_id", "ts"], as_index=False)["event_id"].max()
-    ref = pd.merge_asof(
-        left.sort_values("ts", kind="stable"),
-        r2.sort_values("ts", kind="stable").rename(columns={"event_id": "rid"}),
-        on="ts", by="user_id", direction="backward", allow_exact_matches=True,
-    )
-    assert len(out) == n
-    for _, row in ref.iterrows():
-        expect = None if pd.isna(row.rid) else int(row.rid)
-        assert got[int(row.event_id)] == expect
-
-
 def test_host_backoff_schedule(spark):
     """Streak/backoff/retire semantics: exp growth capped at max, streak 0
     when the latest round succeeded, never-succeeded hosts count from their

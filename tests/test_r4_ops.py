@@ -810,41 +810,6 @@ def test_gear_chunk_stats_spark(spark):
     assert sum(r["chunk_len"] for r in both) >= 0.5 * 3000
 
 
-def test_funnel_steps_order_and_window(spark):
-    """Strict-order funnel: out-of-order events don't count; the window
-    anchors at step 1; the earliest qualifying event per step wins; a
-    deeper step requires all earlier steps."""
-    from datetime import datetime
-
-    from delphi_crawler_spark.operators.events import funnel_steps
-
-    T = lambda m: datetime(2024, 1, 1, 0, m)
-    rows = [
-        # u1 full funnel in order
-        (1, T(0), "view"), (1, T(5), "click"), (1, T(9), "purchase"),
-        # u2: click BEFORE view -> stops at view
-        (2, T(5), "click"), (2, T(10), "view"),
-        # u3: purchase outside the window from the view
-        (3, T(0), "view"), (3, T(5), "click"), (3, T(40), "purchase"),
-        # u4: no funnel events at all
-        (4, T(1), "error"),
-        # u5: two clicks; the EARLIEST after view anchors step 2
-        (5, T(0), "view"), (5, T(2), "click"), (5, T(8), "click"),
-        (5, T(3), "purchase"),  # after click@2? purchase at minute 3 > 2 -> full funnel
-    ]
-    ev = spark.createDataFrame(rows, ["user_id", "ts", "event_type"])
-    out = {r["user_id"]: r for r in funnel_steps(
-        ev, steps=["view", "click", "purchase"], window_s=30 * 60).collect()}
-    assert out[1]["step_reached"] == 3
-    assert out[2]["step_reached"] == 1 and out[2]["step2_us"] is None
-    assert out[3]["step_reached"] == 2
-    assert out[4]["step_reached"] == 0 and out[4]["step1_us"] is None
-    r5 = out[5]
-    assert r5["step_reached"] == 3
-    # earliest click (minute 2) anchors, purchase at minute 3 qualifies
-    assert (r5["step3_us"] - r5["step2_us"]) == 60_000_000
-
-
 def test_zone_map_prune_stats_layout_contrast(spark):
     """Overlap math: a disjoint clustered layout prunes everything
     outside the predicate range; a fully-overlapping layout scans
@@ -1081,9 +1046,7 @@ def test_apply_dust_rules_folds_only_irrelevant(spark):
 
 def test_trend_slope_and_gapfill(spark):
     """OLS slope hand-computed on a rising host; flat and single-day
-    hosts report 0; gapfill inserts exactly the missing in-span days as
-    zeros and never extends beyond the span."""
-    from delphi_crawler_spark.operators.events import gapfill_daily
+    hosts report 0."""
     from delphi_crawler_spark.operators.recrawl import host_trend_slope
 
     act = spark.createDataFrame(
@@ -1097,15 +1060,6 @@ def test_trend_slope_and_gapfill(spark):
     assert out["flat"]["slope"] == 0.0 and not out["flat"]["rising"]
     assert out["one"]["slope"] == 0.0 and out["one"]["n_days"] == 1
     assert out["up"]["mean_daily"] == 3.0
-
-    filled = gapfill_daily(
-        spark.createDataFrame(
-            [("a", 10, 2), ("a", 13, 5), ("b", 7, 1)], ["key", "day", "n"]
-        )
-    ).collect()
-    got = {(r["key"], r["day"]): r["n"] for r in filled}
-    assert got == {("a", 10): 2, ("a", 11): 0, ("a", 12): 0, ("a", 13): 5,
-                   ("b", 7): 1}
 
 
 def test_consistent_hash_resize_stability(spark):
@@ -1406,27 +1360,6 @@ def test_heaps_curve_monotone_and_exact(spark):
     assert all(r["n_new_grams"] == 0 for r in out[1:])
 
 
-def test_anomaly_zscore_spike_and_silence(spark):
-    """A flat-10 host flags the day it spikes to 100 AND the day it goes
-    silent (0); warm-up days (<5 history) never flag; z is computed
-    against the trailing window excluding today."""
-    from delphi_crawler_spark.operators.events import daily_anomaly_zscore
-
-    # silence BEFORE the spike: a spike in the trailing window inflates
-    # sigma and would mask later anomalies (the classic mean/sigma-vs-MAD
-    # caveat, intentionally out of scope)
-    vals = [10, 11, 10, 11, 10, 11, 10, 11, 0, 11, 100]
-    rows = [("h", i, v) for i, v in enumerate(vals)]
-    out = {r["day"]: r for r in daily_anomaly_zscore(
-        spark.createDataFrame(rows, ["key", "day", "n"])).collect()}
-    assert out[8]["anomaly"] and out[8]["zscore"] < -3
-    assert out[10]["anomaly"] and out[10]["zscore"] > 3
-    for d in range(5):  # fewer than min_history prior days
-        assert not out[d]["anomaly"], d
-    # ordinary days do not flag
-    assert not out[7]["anomaly"]
-
-
 def test_readability_hand_computed(spark):
     """Known sentence: 'The cat sat on the mat. It was happy.' — 9 words,
     2 sentences, syllables by the [aeiouy]+-run rule; empty text nulls
@@ -1552,53 +1485,6 @@ def test_bloom_file_index_no_false_negatives(spark):
 
     with pytest.raises(ValueError):
         build_file_blooms(data, "file_id", "k", bits=100)
-
-
-def test_sliding_distinct_hand_computed(spark):
-    """u1 active d1,d3; u2 active d1; u3 active d5: the 3-day trailing
-    curve is checkable by hand, days outside the span are excluded, and
-    a repeat visit never double-counts."""
-    from delphi_crawler_spark.operators.events import sliding_distinct_daily
-
-    rows = [(1, 1), (1, 1), (1, 3), (2, 1), (3, 5)]  # (user, day), dup visit
-    df = spark.createDataFrame(rows, ["user_id", "day"])
-    out = {
-        r["day"]: r
-        for r in sliding_distinct_daily(df, "user_id", "day", 3).collect()
-    }
-    # window [d-2, d]: d1 {1,2}; d2 {1,2}; d3 {1,2,1->} {u1,u2,u1@3}= {1,2};
-    # d4 {1}; d5 {3,1@3}
-    assert set(out) == {1, 2, 3, 4, 5}
-    assert [out[d]["n_active_window"] for d in (1, 2, 3, 4, 5)] == [2, 2, 2, 1, 2]
-    assert [out[d]["n_active"] for d in (1, 2, 3, 4, 5)] == [2, 0, 1, 0, 1]
-
-    with pytest.raises(ValueError):
-        sliding_distinct_daily(df, "user_id", "day", 0)
-
-
-def test_bot_detect_metronome_vs_bursty(spark):
-    """A metronomic key (identical gaps, CV=0) flags; a bursty key does
-    not; a key below min_gaps reports NULL cv and never flags."""
-    import datetime
-
-    from delphi_crawler_spark.operators.events import interarrival_bot_signals
-
-    t0 = datetime.datetime(2026, 1, 1)
-    rows = []
-    for i in range(7):  # bot: exactly every 60s
-        rows.append((100, t0 + datetime.timedelta(seconds=60 * i), i))
-    bursty = [0, 1, 2, 300, 301, 4000, 4001]
-    for j, s in enumerate(bursty):  # human: burst-gap-burst
-        rows.append((200, t0 + datetime.timedelta(seconds=s), 100 + j))
-    for i in range(4):  # too few gaps (3 < 5)
-        rows.append((300, t0 + datetime.timedelta(seconds=60 * i), 200 + i))
-    df = spark.createDataFrame(rows, ["user_id", "ts", "event_id"])
-    out = {r["user_id"]: r for r in interarrival_bot_signals(df).collect()}
-    assert out[100]["is_bot"] and out[100]["cv_gap"] == 0.0
-    assert out[100]["mean_gap_s"] == 60.0 and out[100]["n_gaps"] == 6
-    assert not out[200]["is_bot"] and out[200]["cv_gap"] > 1.0
-    assert out[300]["cv_gap"] is None and not out[300]["is_bot"]
-    assert out[300]["n_events"] == 4 and out[300]["n_gaps"] == 3
 
 
 def test_orphan_file_plan_classification(spark):
@@ -1958,32 +1844,6 @@ def test_distribution_drift_identical_and_disjoint(spark):
     assert mid["psi"] == rev["psi"]  # PSI is symmetric by construction
 
 
-def test_top_paths_order_and_truncation(spark):
-    """Paths use (ts, order) sequence, truncate at path_len, count by
-    key, rank with lexicographic tie-break."""
-    import datetime
-
-    from delphi_crawler_spark.operators.events import top_event_paths
-
-    t0 = datetime.datetime(2026, 1, 1)
-    mk = lambda s: t0 + datetime.timedelta(seconds=s)  # noqa: E731
-    rows = []
-    for u in (1, 2):  # two users with view>click>buy
-        rows += [(u, mk(1), "view", 1), (u, mk(2), "click", 2), (u, mk(3), "buy", 3)]
-    # user 3: 5+ events, truncated at 3 -> view>view>view
-    rows += [(3, mk(i), "view", i) for i in range(1, 6)]
-    # user 4: out-of-order inserts, ts decides: click then view
-    rows += [(4, mk(9), "view", 1), (4, mk(8), "click", 2)]
-    df = spark.createDataFrame(rows, ["user_id", "ts", "event_type", "event_id"])
-    out = top_event_paths(df, path_len=3, top_k=10).collect()
-    got = {r["path"]: r for r in out}
-    assert got["view>click>buy"]["n_keys"] == 2
-    assert got["view>click>buy"]["rank"] == 1
-    assert got["view>view>view"]["n_keys"] == 1
-    assert got["click>view"]["n_keys"] == 1  # ts order, not insert order
-    assert got["view>click>buy"]["share"] == 0.5  # 2 of 4 users
-
-
 def test_table_column_stats_hand_computed(spark):
     """NDV, null fraction, min/max and avg length on a known frame; one
     job (single-pass wide aggregate)."""
@@ -2208,38 +2068,6 @@ def test_lexical_diversity_hand_computed(spark):
     assert out[4]["n_tokens"] == 0 and out[4]["ttr"] is None
 
 
-def test_concurrency_profile_composition(spark):
-    """Two overlapping sessions and one later session: the sweep line
-    over sessionized intervals reports peak depth 2 in the overlap and
-    0 in the idle gap."""
-    import datetime
-
-    from delphi_crawler_spark.operators.events import sessionize
-    from delphi_crawler_spark.storage.zorder import key_overlap_depth
-
-    t0 = datetime.datetime(2026, 1, 1)
-    mk = lambda s: t0 + datetime.timedelta(seconds=s)  # noqa: E731
-    rows = [
-        (1, mk(0), 1, 1.0), (1, mk(100), 2, 1.0),   # u1: [0,100]
-        (2, mk(50), 3, 1.0), (2, mk(150), 4, 1.0),  # u2: [50,150]
-        (3, mk(10_000), 5, 1.0),                     # u3: [10k,10k]
-    ]
-    ev = spark.createDataFrame(rows, ["user_id", "ts", "event_id", "value"])
-    ses = sessionize(ev, gap_seconds=1800)
-    iv = ses.select(
-        F.concat("user_id", F.lit("#"), "session_no").alias("file_id"),
-        F.unix_seconds(F.col("session_start").cast("timestamp_ltz")).alias("min_key"),
-        F.unix_seconds(F.col("session_end").cast("timestamp_ltz")).alias("max_key"),
-    )
-    prof = {r["pos"]: r["depth"] for r in key_overlap_depth(iv).collect()}
-    ep = int(t0.timestamp())
-    assert prof[ep + 0] == 1
-    assert prof[ep + 50] == 2       # overlap
-    assert prof[ep + 101] == 1      # u1 ended
-    assert prof[ep + 151] == 0      # idle gap
-    assert prof[ep + 10_000] == 1
-
-
 def test_compression_ratio_signal(spark):
     """Repetitive text compresses far below varied prose; empty text is
     NULL; the flag fires only under the threshold."""
@@ -2428,33 +2256,6 @@ def test_weighted_median_hand_computed(spark):
         weighted_quantile_by_group(df, "host", "v", "w", q=0)
 
 
-def test_rfm_segments_deterministic_tiles(spark):
-    """Freshest+busiest+richest key lands in segment 'nnn'; stale quiet
-    key in '111'; ties break on key so reruns are identical."""
-    import datetime
-
-    from delphi_crawler_spark.operators.events import rfm_segments
-
-    t0 = datetime.datetime(2026, 1, 1)
-    now_us = int((t0 + datetime.timedelta(days=100)).timestamp() * 1e6)
-    rows = []
-    for u in range(1, 6):  # user u: u events, last at day u*10, value u
-        for i in range(u):
-            rows.append((u, t0 + datetime.timedelta(days=u * 10, hours=i), i, float(u)))
-    df = spark.createDataFrame(rows, ["user_id", "ts", "event_id", "value"])
-    out = {r["user_id"]: r for r in rfm_segments(df, now_us).collect()}
-    assert out[5]["segment"] == "555" and out[1]["segment"] == "111"
-    assert out[5]["frequency"] == 5 and out[5]["monetary"] == 25.0
-    # two identical reruns agree exactly (deterministic NTILE order)
-    again = {r["user_id"]: r["segment"] for r in rfm_segments(df, now_us).collect()}
-    assert {u: r["segment"] for u, r in out.items()} == again
-
-    import pytest as _p
-
-    with _p.raises(ValueError):
-        rfm_segments(df, now_us, n_tiles=1)
-
-
 def test_ttl_plan_actions(spark):
     """All-dead file rewrites, lightly-dead file gets a delete vector,
     fresh file untouched; threshold boundary is inclusive."""
@@ -2484,44 +2285,3 @@ def test_ttl_plan_actions(spark):
         ttl_expiry_plan(df, now, ttl_ms=0)
 
 
-def test_holt_forecast_hand_computed(spark):
-    """Series 1,3,2,5 at alpha=.5/beta=.3: init (l=3,b=2), two steps to
-    (5.025, 1.5425); a linear ramp forecasts its own continuation; one
-    observation yields NULLs."""
-    from delphi_crawler_spark.operators.events import holt_forecast
-
-    rows = (
-        [("a", d, x) for d, x in enumerate([1.0, 3.0, 2.0, 5.0])]
-        + [("ramp", d, float(10 + 2 * d)) for d in range(6)]
-        + [("solo", 0, 9.0)]
-    )
-    df = spark.createDataFrame(rows, ["key", "day", "n"])
-    out = {r["key"]: r for r in holt_forecast(df).collect()}
-    a = out["a"]
-    assert a["level"] == 5.025 and a["trend"] == round(1.5424999999999998, 6)
-    assert a["forecast_1d"] == round(5.025 + 1.5424999999999998, 6)
-    r = out["ramp"]  # exact linear: level tracks, trend = 2
-    assert r["trend"] == 2.0 and r["forecast_1d"] == 22.0
-    assert r["forecast_7d"] == 34.0
-    assert out["solo"]["level"] is None and out["solo"]["n_days"] == 1
-
-    import pytest as _p
-
-    with _p.raises(ValueError):
-        holt_forecast(df, alpha=0)
-
-
-def test_new_vs_returning_split(spark):
-    """Day 1 is all-new by definition; a user's second day counts
-    returning; repeat visits in one day never double-count."""
-    from delphi_crawler_spark.operators.events import new_vs_returning_daily
-
-    rows = [(1, 1), (1, 1), (2, 1), (1, 2), (3, 2), (1, 3)]
-    df = spark.createDataFrame(rows, ["user_id", "day"])
-    out = {r["day"]: r for r in new_vs_returning_daily(df).collect()}
-    d1 = out[1]
-    assert d1["n_active"] == 2 and d1["n_new"] == 2 and d1["new_share"] == 1.0
-    d2 = out[2]
-    assert d2["n_active"] == 2 and d2["n_new"] == 1 and d2["n_returning"] == 1
-    d3 = out[3]
-    assert d3["n_new"] == 0 and d3["n_returning"] == 1 and d3["new_share"] == 0.0
