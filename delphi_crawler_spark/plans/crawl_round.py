@@ -25,7 +25,13 @@ Every emitted ordering is a total order with the ``seq`` tiebreak, so the
 output is byte-identical at any parallelism level; every sink is an atomic
 manifest commit, and the checkpoint row is written last, so a killed run
 resumes exactly (reference restart semantics, IndexProcessing.scala:36-41,
-upgraded from lossy to exact).
+upgraded from lossy to exact). Bootstrap has the same commit point: its
+round -1 checkpoint, so a bootstrap killed before it is redone in full.
+
+The frontier is partitioned ``bucket(16, host)`` as a hidden Iceberg-style
+partition spec: bootstrap declares it once in the table's manifest and the
+store lays out every frontier write and compaction under it. The engine
+writes and reads plain ``FRONTIER_COLS`` frames and never sees the layout.
 
 Scale invariants (100 TB / 10^10 URLs) — each was a round-1 scale-killer,
 now structural:
@@ -94,6 +100,14 @@ FRONTIER_COLS = [
     "url", "url_hash", "url_hash64", "host", "host_rev",
     "priority", "discovery_ts", "seq", "round",
 ]
+# the frontier's hidden partition spec, bucket(FRONTIER_HOST_BUCKETS, host):
+# a host's URLs land in one bucket directory per part, so per-host scans
+# (``TableStore.prune_read``) prune to 1/N of the data and hot-host parts
+# stay isolated from the long tail. Declared once at bootstrap; every
+# frontier write and compaction follows it inside the store.
+FRONTIER_HOST_BUCKETS = 16
+# the checkpoint key holding each rolled-back table's manifest id
+SNAP_KEYS = {FRONTIER: "frontier_snap", FETCHED: "fetched_snap"}
 
 
 def candidate_urls(
@@ -132,12 +146,6 @@ class CrawlConfig:
     n_docs: int | None = None  # size of the synthetic fetch corpus
     compact_every: int = 0  # run table maintenance every K rounds (0 = off)
     compact_target_bytes: int = 128 << 20
-    # frontier appends are dir-partitioned on pmod(xxhash64(host), N) — the
-    # Iceberg `PARTITIONED BY (bucket(N, host))` analogue from the design
-    # goal: a host's URLs land in one bucket per part, so per-host
-    # maintenance scans prune to 1/N of the data and hot-host parts stay
-    # isolated from the long tail. 0 disables.
-    host_buckets: int = 16
 
 
 class CrawlEngine:
@@ -162,17 +170,16 @@ class CrawlEngine:
         # persisted — _load_bloom rebuilds it when the key misses
         self._bloom_cache: tuple[dict, BloomBits] | None = None
 
-    def _bucketed(self, df: DataFrame) -> tuple[DataFrame, list[str] | None]:
-        """Attach the host-bucket partition column when configured."""
-        if not self.cfg.host_buckets:
-            return df, None
-        return (
-            df.withColumn(
-                "host_bucket",
-                F.pmod(F.xxhash64("host"), F.lit(self.cfg.host_buckets)).cast("int"),
-            ),
-            ["host_bucket"],
-        )
+    def _rollback(self, last: dict | None) -> None:
+        """Roll FRONTIER and FETCHED back to the snapshots the checkpoint
+        ``last`` recorded — discards the partial (but manifest-complete)
+        commits a killed round left behind."""
+        if last is None:
+            return
+        for tbl, key in SNAP_KEYS.items():
+            snap = last.get(key)
+            if snap and self.store.current_snapshot(tbl) != snap:
+                self.store.restore(tbl, snap)
 
     # ------------------------------------------------------------- bloom
     def _frontier_bloom(self, m_bits: int, k: int) -> BloomBits:
@@ -213,23 +220,26 @@ class CrawlEngine:
 
     # ------------------------------------------------------------ bootstrap
     def bootstrap(self, seeds: DataFrame) -> None:
-        """Seed the frontier: canonicalize -> robots -> F1 dedup. Idempotent
-        (skipped when a frontier manifest already exists — resume path).
-        Also creates/migrates the declared feature-schema registry (S10,
-        reference index bootstrap + version check)."""
+        """Seed the frontier: canonicalize -> robots -> F1 dedup, written
+        under the frontier's ``bucket(FRONTIER_HOST_BUCKETS, host)`` spec.
+        Its commit point is the round -1 checkpoint: skipped once that
+        exists (resume path); a bootstrap killed before it rewrites the
+        frontier snapshot from the seeds. Also creates/migrates the
+        declared feature-schema registry (S10, reference index bootstrap +
+        version check)."""
         from delphi_crawler_spark.storage.schema_registry import migrate_if_needed
 
         migrate_if_needed(self.store)
-        if self.store.exists(FRONTIER):
+        if self.store.last_checkpoint() is not None:
             return
+        self.store.set_partition_spec(FRONTIER, "host", FRONTIER_HOST_BUCKETS)
         cand = complete_url_keys(candidate_urls(seeds, self.robots, ["seq"]))
         frontier = cand.select(
             "url", "url_hash", "url_hash64", "host", "host_rev",
             "priority", "discovery_ts", "seq",
             F.lit(-1).alias("round"),
         )
-        frontier, part_by = self._bucketed(frontier)
-        snap = self.store.write_snapshot(FRONTIER, frontier, partition_by=part_by)
+        snap = self.store.write_snapshot(FRONTIER, frontier)
         # one bootstrap-time pass over the written part: max seq (the global
         # monotonic sequence continues from here) + item count (bloom sizing)
         agg = self.store.read(FRONTIER).agg(
@@ -253,15 +263,10 @@ class CrawlEngine:
         last = self.store.last_checkpoint()
         if last is not None and last["round"] >= round_no:
             return {"round": round_no, "skipped": True}
-        # exact resume: a killed round may have left partial (but manifest-
-        # complete) commits — roll frontier + fetched back to the last
-        # committed checkpoint, then recompute deterministically; schedule/
-        # metrics heal via replace_round (resume-equivalence, SURVEY.md §5d)
-        if last is not None:
-            for tbl, key in ((FRONTIER, "frontier_snap"), (FETCHED, "fetched_snap")):
-                snap = last.get(key)
-                if snap and self.store.current_snapshot(tbl) != snap:
-                    self.store.restore(tbl, snap)
+        # exact resume: roll frontier + fetched back to the last committed
+        # checkpoint, then recompute deterministically; schedule/metrics
+        # heal via replace_round (resume-equivalence, SURVEY.md §5d)
+        self._rollback(last)
 
         frontier = self.store.read(FRONTIER)
         # merge-on-read pending set: discovered minus fetched-log. The join
@@ -336,8 +341,7 @@ class CrawlEngine:
             "new_links": n_new_links,
             "emitted_total": (last.get("emitted_total", 0) if last else 0) + n_admitted,
             "max_seq": max_seq,
-            "frontier_snap": self.store.current_snapshot(FRONTIER),
-            "fetched_snap": self.store.current_snapshot(FETCHED),
+            **{key: self.store.current_snapshot(t) for t, key in SNAP_KEYS.items()},
             "bloom": bloom_meta,
         }
         self.store.checkpoint(round_no, stats)  # commit point — written LAST
@@ -406,10 +410,7 @@ class CrawlEngine:
                 "priority", "discovery_ts", "seq",
                 F.lit(round_no).alias("round"),
             )
-            new_rows, part_by = self._bucketed(new_rows)
-            self.store.append(
-                FRONTIER, new_rows, partition_by=part_by, round_no=round_no
-            )
+            self.store.append(FRONTIER, new_rows, round_no=round_no)
             if bloom is not None:
                 items = bloom_meta["items"] + n_new
                 if items > bloom_meta["capacity"]:
@@ -453,12 +454,7 @@ class CrawlEngine:
         """
         tb = target_bytes or self.cfg.compact_target_bytes
         last = self.store.last_checkpoint()
-        snap_keys = {FRONTIER: "frontier_snap", FETCHED: "fetched_snap"}
-        if last is not None:
-            for tbl, key in snap_keys.items():
-                snap = last.get(key)
-                if snap and self.store.current_snapshot(tbl) != snap:
-                    self.store.restore(tbl, snap)
+        self._rollback(last)
         protect_rounds = frozenset(
             {last["round"] + 1} if last is not None else set()
         )
@@ -466,29 +462,21 @@ class CrawlEngine:
         for tbl in (FRONTIER, FETCHED, SCHEDULE, METRICS):
             if not self.store.exists(tbl):
                 continue
-            # frontier compaction keeps the host-bucket dir layout so every
-            # part stays prunable on the same key
-            part_by = (
-                ["host_bucket"]
-                if tbl == FRONTIER and self.cfg.host_buckets
-                else None
-            )
             new_mani = self.store.compact(
-                tbl, target_bytes=tb, protect_rounds=protect_rounds,
-                partition_by=part_by,
+                tbl, target_bytes=tb, protect_rounds=protect_rounds
             )
             stats[tbl] = {"compacted": new_mani is not None}
-            if new_mani and last is not None and tbl in snap_keys:
+            if new_mani and last is not None and tbl in SNAP_KEYS:
                 self.store.amend_checkpoint(
-                    last["round"], {snap_keys[tbl]: new_mani}
+                    last["round"], {SNAP_KEYS[tbl]: new_mani}
                 )
         last = self.store.last_checkpoint()  # re-read amended snaps
         for tbl in (FRONTIER, FETCHED, SCHEDULE, METRICS):
             if not self.store.exists(tbl):
                 continue
             protect = set()
-            if last is not None and last.get(snap_keys.get(tbl, "")):
-                protect.add(last[snap_keys[tbl]])
+            if last is not None and last.get(SNAP_KEYS.get(tbl, "")):
+                protect.add(last[SNAP_KEYS[tbl]])
             stats[tbl] = {
                 **stats.get(tbl, {}),
                 **self.store.expire(tbl, keep_manifests, protect),

@@ -29,6 +29,12 @@ jar), built the way Iceberg itself is built:
   compacts to a single part — the copy-on-write plan Iceberg's MERGE runs;
   use it for keyed mutation of dimension-sized tables, use append/
   replace_round for fact/log tables;
+- partitioning is **hidden**, as in Iceberg: ``set_partition_spec``
+  records ``bucket(n, col)`` in the manifest, and every write path lays
+  its part out under the current spec through the one part writer
+  (``_write_part``). Callers write and read plain frames; each part
+  records the spec it was written with, so ``prune_read`` prunes every
+  part under its own spec across spec evolutions;
 - manifests are retained, so time-travel/rollback for resume is free
   (``restore`` re-points ``_current`` to an older manifest);
 - **maintenance** mirrors Iceberg's: ``compact`` bin-packs small parts into
@@ -119,22 +125,26 @@ class TableStore:
         with open(os.path.join(self._tdir(table), mani)) as f:
             return json.load(f)["parts"]
 
-    def _write_part(
-        self,
-        table: str,
-        df: DataFrame,
-        partition_by: list[str] | None = None,
-        sort_within_partitions: list[str] | None = None,
-    ) -> str:
+    def _write_part(self, table: str, df: DataFrame, round_no: int | None) -> dict:
+        """Write ``df`` as ONE immutable part and return its manifest entry
+        — the single part writer of every write path. On a table with a
+        partition spec (``set_partition_spec``) the part is written under
+        it: the physical bucket column is computed here, the part directory
+        is hive-partitioned by it, and the entry records the spec it was
+        written with (the metadata ``prune_read`` needs after any number of
+        spec evolutions)."""
         os.makedirs(self._tdir(table), exist_ok=True)
         part = f"part-{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-        if sort_within_partitions:
-            df = df.sortWithinPartitions(*sort_within_partitions)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(os.path.join(self._tdir(table), part))
-        return part
+        spec = self._current_spec(table)
+        writer = df.write
+        if spec:
+            bucket = self._spec_bucket(spec, F.col(spec["col"]))
+            writer = df.withColumn(spec["name"], bucket).write.partitionBy(spec["name"])
+        writer.mode("overwrite").parquet(os.path.join(self._tdir(table), part))
+        entry = {"path": part, "round": round_no, "bytes": self._dir_bytes(table, part)}
+        if spec:
+            entry["spec"] = spec
+        return entry
 
     def _dir_bytes(self, table: str, part: str) -> int:
         total = 0
@@ -142,13 +152,6 @@ class TableStore:
             for f in files:
                 total += os.path.getsize(os.path.join(dirpath, f))
         return total
-
-    def _part_entry(self, table: str, part: str, round_no: int | None) -> dict:
-        return {
-            "path": part,
-            "round": round_no,
-            "bytes": self._dir_bytes(table, part),
-        }
 
     _SPEC_CARRY = object()
 
@@ -191,7 +194,7 @@ class TableStore:
             raise FileNotFoundError(f"table {table!r} has no committed manifest")
         return self._read_manifest(table, mani)
 
-    def _scan(self, table: str, parts: list[dict]) -> DataFrame:
+    def _scan(self, table: str, parts: list[dict], prune=None) -> DataFrame:
         """Union of the given part entries — every reader's scan plan.
         Parts may be dir-partitioned (key=value subdirs). Spark's multi-
         path partition discovery refuses sibling partitioned roots
@@ -199,16 +202,19 @@ class TableStore:
         own self-consistent scan and the table view is their union — the
         manifest-of-parts read plan. Predicate pushdown and partition
         pruning apply per branch; compaction keeps the branch count O(1).
-        A part written through the hidden-partition spec path
-        (``append_bucketed``) drops its recorded physical bucket column
-        here, so the logical schema is spec-independent — the Iceberg
-        hidden-partitioning contract that makes ``set_partition_spec``
-        evolution invisible to readers."""
+        A part written under a partition spec drops its recorded physical
+        bucket column here, so the logical schema is spec-independent —
+        the Iceberg hidden-partitioning contract that makes
+        ``set_partition_spec`` evolution invisible to readers. With
+        ``prune`` set, such a part is first filtered to the bucket of that
+        key value under ITS OWN spec (``prune_read``)."""
         frames = []
         for p in parts:
             f = self.spark.read.parquet(os.path.join(self._tdir(table), p["path"]))
             sp = p.get("spec")
             if sp and sp["name"] in f.columns:
+                if prune is not None:
+                    f = f.where(F.col(sp["name"]) == self._spec_bucket(sp, F.lit(prune)))
                 f = f.drop(sp["name"])
             frames.append(f)
         out = frames[0]
@@ -234,13 +240,16 @@ class TableStore:
         return self._current_spec(table)
 
     def set_partition_spec(self, table: str, col: str, buckets: int) -> dict:
-        """Declare (or EVOLVE) the table's partition spec: bucket(col, n).
-        Iceberg partition-spec-evolution semantics — a metadata-only
-        commit: existing parts keep the layout (and recorded spec) they
-        were written with; only writes after this use the new spec. Reads
-        stay correct across the boundary because every part is pruned
-        under its OWN recorded spec (``prune_read``) and the physical
-        bucket column never reaches the logical schema (``read``)."""
+        """Declare (or EVOLVE) the table's partition spec: bucket(col, n),
+        the Iceberg ``PARTITIONED BY (bucket(n, col))`` analogue. Every
+        later write (``write_snapshot``, ``append``, ``replace_round``,
+        ``merge_upsert``, ``compact``) lays its part out under it; callers
+        write plain frames. Iceberg partition-spec-evolution semantics — a
+        metadata-only commit: existing parts keep the layout (and recorded
+        spec) they were written with. Reads stay correct across the
+        boundary because every part is pruned under its OWN recorded spec
+        (``prune_read``) and the physical bucket column never reaches the
+        logical schema (``read``)."""
         if buckets < 1:
             raise ValueError("set_partition_spec() needs buckets >= 1")
         spec = {"col": col, "buckets": int(buckets), "name": f"{col}_b{buckets}"}
@@ -248,40 +257,6 @@ class TableStore:
         os.makedirs(self._tdir(table), exist_ok=True)
         self._commit(table, parts, spec=spec)
         return spec
-
-    def append_bucketed(
-        self, table: str, df: DataFrame, round_no: int | None = None
-    ) -> str:
-        """Append under the table's current spec: the physical bucket
-        column is computed here (hidden from readers), the part directory
-        is hive-partitioned by it, and the part entry records the spec it
-        was written with — the manifest metadata prune_read needs after
-        any number of spec evolutions."""
-        spec = self._current_spec(table)
-        if spec is None:
-            raise ValueError(
-                f"table {table!r} has no partition spec; call set_partition_spec first"
-            )
-        entry = self._write_spec_part(table, df, spec, round_no)
-        return self._commit(table, self.parts(table) + [entry])
-
-    def _write_spec_part(
-        self,
-        table: str,
-        df: DataFrame,
-        spec: dict,
-        round_no: int | None,
-        partition_by: list[str] | None = None,
-    ) -> dict:
-        """Write ``df`` as one part hive-partitioned by ``spec``'s bucket
-        column and return its manifest entry, which records the spec."""
-        dfb = df.withColumn(spec["name"], self._spec_bucket(spec, F.col(spec["col"])))
-        part = self._write_part(
-            table, dfb, partition_by=[spec["name"], *(partition_by or [])]
-        )
-        entry = self._part_entry(table, part, round_no)
-        entry["spec"] = spec
-        return entry
 
     def prune_read(self, table: str, value) -> DataFrame:
         """Point-lookup scan with per-part spec-aware pruning (Iceberg
@@ -293,25 +268,14 @@ class TableStore:
         row-group pushdown still applies). At 10^10 rows this turns a
         frontier host lookup into O(files-in-one-bucket) per part instead
         of O(table)."""
-        frames = []
-        key_col = None
-        for p in self.parts(table):
-            f = self.spark.read.parquet(os.path.join(self._tdir(table), p["path"]))
-            sp = p.get("spec")
-            if sp:
-                key_col = sp["col"]
-                f = f.where(
-                    F.col(sp["name"]) == self._spec_bucket(sp, F.lit(value))
-                ).drop(sp["name"])
-            frames.append(f)
-        if key_col is None:
-            key_col = (self._current_spec(table) or {}).get("col")
-        if key_col is None:
+        parts = self.parts(table)
+        specs = [p["spec"] for p in parts if p.get("spec")]
+        spec = specs[-1] if specs else self._current_spec(table)
+        if spec is None:
             raise ValueError(f"table {table!r} has no partition spec to prune on")
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f, allowMissingColumns=True)
-        return out.where(F.col(key_col) == F.lit(value))
+        return self._scan(table, parts, prune=value).where(
+            F.col(spec["col"]) == F.lit(value)
+        )
 
     def read_parts(self, table: str, round_no: int) -> DataFrame:
         """Scan only the parts tagged with ``round_no`` — manifest-level
@@ -333,40 +297,27 @@ class TableStore:
             return self.read(table).limit(0)
         return self._scan(table, parts)
 
-    def write_snapshot(
-        self,
-        table: str,
-        df: DataFrame,
-        partition_by: list[str] | None = None,
-        sort_within_partitions: list[str] | None = None,
-    ) -> str:
-        """Commit ``df`` as the table's full new contents (one part),
-        atomically. ``partition_by`` is the Iceberg ``PARTITIONED BY``
-        analogue; ``sort_within_partitions`` keeps files range-clustered."""
-        part = self._write_part(table, df, partition_by, sort_within_partitions)
-        return self._commit(table, [self._part_entry(table, part, None)])
+    def write_snapshot(self, table: str, df: DataFrame) -> str:
+        """Commit ``df`` as the table's full new contents (one part, laid
+        out under the table's partition spec if it has one), atomically."""
+        return self._commit(table, [self._write_part(table, df, None)])
 
-    def append(
-        self,
-        table: str,
-        df: DataFrame,
-        partition_by: list[str] | None = None,
-        round_no: int | None = None,
-    ) -> str:
-        """Append rows as ONE new immutable part — never reads or rewrites
-        existing data (Iceberg fast-append). O(len(df)) write volume."""
-        part = self._write_part(table, df, partition_by)
+    def append(self, table: str, df: DataFrame, round_no: int | None = None) -> str:
+        """Append rows as ONE new immutable part (under the table's
+        partition spec if it has one) — never reads or rewrites existing
+        data (Iceberg fast-append). O(len(df)) write volume."""
+        entry = self._write_part(table, df, round_no)
         old = self.parts(table) if self.exists(table) else []
-        return self._commit(table, old + [self._part_entry(table, part, round_no)])
+        return self._commit(table, old + [entry])
 
     def replace_round(self, table: str, df: DataFrame, round_no: int) -> str:
         """Idempotent per-round write: drop any parts a killed run left
         tagged with this round, add the recomputed one. Other rounds' parts
         are untouched (no rewrite)."""
-        part = self._write_part(table, df)
+        entry = self._write_part(table, df, round_no)
         old = self.parts(table) if self.exists(table) else []
         kept = [p for p in old if p.get("round") != round_no]
-        return self._commit(table, kept + [self._part_entry(table, part, round_no)])
+        return self._commit(table, kept + [entry])
 
     def merge_upsert(
         self,
@@ -375,7 +326,6 @@ class TableStore:
         key: str | list[str],
         update_cols: list[str] | None = None,
         insert: bool = True,
-        partition_by: list[str] | None = None,
     ) -> str:
         """MERGE INTO table USING source ON key — idempotent keyed upsert.
 
@@ -393,10 +343,10 @@ class TableStore:
         keys = [key] if isinstance(key, str) else list(key)
         if not self.exists(table):
             merged = source if insert else source.limit(0)
-            return self.write_snapshot(table, merged, partition_by=partition_by)
+            return self.write_snapshot(table, merged)
         target = self.read(table)
         merged = merge_frames(target, source, keys, update_cols, insert)
-        return self.write_snapshot(table, merged, partition_by=partition_by)
+        return self.write_snapshot(table, merged)
 
     # ---------------------------------------------------------- maintenance
     def compact(
@@ -404,7 +354,6 @@ class TableStore:
         table: str,
         target_bytes: int = 128 << 20,
         protect_rounds: frozenset[int] | set[int] = frozenset(),
-        partition_by: list[str] | None = None,
     ) -> str | None:
         """Bin-pack small parts into ~``target_bytes`` parts (Iceberg
         ``rewrite_data_files`` binpack). Parts already >= target and parts
@@ -439,20 +388,12 @@ class TableStore:
             cur.append(p)
             cur_b += b
         groups.append(cur)
-        spec = self._current_spec(table)
         merged_away: list[str] = []
         new_entries: list[dict] = []
         for g in groups:
             if len(g) < 2:
                 continue
-            df = self._scan(table, g)
-            if spec:
-                new_entries.append(
-                    self._write_spec_part(table, df, spec, None, partition_by)
-                )
-            else:
-                newp = self._write_part(table, df, partition_by=partition_by)
-                new_entries.append(self._part_entry(table, newp, None))
+            new_entries.append(self._write_part(table, self._scan(table, g), None))
             merged_away.extend(p["path"] for p in g)
         if not new_entries:
             return None
@@ -491,20 +432,6 @@ class TableStore:
                 shutil.rmtree(os.path.join(tdir, entry), ignore_errors=True)
                 dropped_parts += 1
         return {"manifests_removed": dropped_manis, "parts_removed": dropped_parts}
-
-    def expire_blobs(self, keep: set[str] | frozenset[str]) -> int:
-        """Delete sidecar blobs not in ``keep`` (store-relative paths) —
-        callers pass the blobs their latest checkpoint references."""
-        d = os.path.join(self.root, "blobs")
-        if not os.path.isdir(d):
-            return 0
-        keep_names = {os.path.basename(k) for k in keep}
-        removed = 0
-        for f in os.listdir(d):
-            if f not in keep_names and not f.startswith(".tmp-"):
-                os.remove(os.path.join(d, f))
-                removed += 1
-        return removed
 
     # ----------------------------------------------------------- blob store
     def save_blob(self, name: str, data: bytes) -> str:

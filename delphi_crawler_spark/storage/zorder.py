@@ -1,9 +1,9 @@
 """Z-order (Morton-curve) clustered table layout for multi-column file skipping.
 
-Directory partitioning (tablestore host buckets) prunes on ONE axis;
-bucketing (storage/bucketing.py) co-locates ONE join key. A 100-TB crawl
-store is also range-queried on TWO axes at once — (host_bucket,
-discovery_round), (url_hash, ts), (doc length, quality score) — and a sort
+Directory partitioning (the tablestore's hidden bucket(n, host) spec)
+prunes on ONE axis; bucketing (storage/bucketing.py) co-locates ONE join
+key. A 100-TB crawl store is also range-queried on TWO axes at once —
+(host bucket, discovery_round), (url_hash, ts), (doc length, quality score) — and a sort
 on either axis alone leaves the other scattered across every file, so
 min/max footer stats prune nothing. Z-ORDERING interleaves the bits of
 both keys into one Morton code and range-partitions + sorts files by it:

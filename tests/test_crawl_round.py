@@ -163,6 +163,35 @@ def test_resume_equivalence_mid_round_kill(spark, tmp_path, oracle_result):
         assert bloom.words.tobytes() == carried.words.tobytes()
 
 
+def test_bootstrap_kill_at_checkpoint_resumes_exactly(spark, tmp_path, oracle_result):
+    """Kill bootstrap at its commit point, the round -1 checkpoint, after
+    the frontier snapshot is written: a fresh engine must redo bootstrap
+    rather than skip it on the existing frontier, so the crawl still
+    matches the oracle and carries a bloom (round 0 continues the seed
+    seq, not 0)."""
+    root = tmp_path / "store_boot_kill"
+    eng = CrawlEngine(
+        spark, str(root),
+        politeness=politeness_df(spark), robots=robots_df(spark),
+        config=CrawlConfig(round_ms=ROUND_MS, n_docs=N_DOCS),
+    )
+    def boom(round_no, payload):
+        raise RuntimeError("killed at the bootstrap checkpoint")
+    eng.store.checkpoint = boom
+    with pytest.raises(RuntimeError):
+        eng.bootstrap(seed_urls_df(spark, n=N_SEEDS))
+    assert eng.store.exists("frontier") and eng.store.last_checkpoint() is None
+
+    eng2 = _run_engine(spark, root)  # fresh engine: bootstrap + every round
+    assert eng2.schedule_rows() == oracle_result.schedule
+    assert eng2.seen_set() == oracle_result.seen
+    assert eng2.store.last_checkpoint()["bloom"] is not None
+    seqs = eng2.store.read("frontier").agg(
+        F.count("seq").alias("n"), F.count_distinct("seq").alias("d")
+    ).collect()[0]
+    assert seqs.n == seqs.d
+
+
 def test_rounds_are_idempotent(spark, tmp_path):
     root = tmp_path / "store_idem"
     eng = _run_engine(spark, root, n_rounds=2)

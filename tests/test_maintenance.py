@@ -26,6 +26,7 @@ from delphi_crawler_spark.datagen import (
 from delphi_crawler_spark.plans.crawl_round import (
     FETCHED,
     FRONTIER,
+    FRONTIER_COLS,
     CrawlConfig,
     CrawlEngine,
 )
@@ -104,13 +105,13 @@ def test_expire_removes_only_unreferenced(spark, tmp_path):
     assert store2.read("tbl").count() == 5
 
 
-def test_expire_blobs_keeps_referenced(spark, tmp_path):
+def test_save_load_blob_roundtrip(spark, tmp_path):
     store = TableStore(spark, str(tmp_path / "t"))
     keep = store.save_blob("bloom", b"live")
-    store.save_blob("bloom", b"dead1")
-    store.save_blob("bloom", b"dead2")
-    assert store.expire_blobs({keep}) == 2
+    other = store.save_blob("bloom", b"dead1")
+    assert keep != other  # blobs are never overwritten
     assert store.load_blob(keep) == b"live"
+    assert store.load_blob(other) == b"dead1"
 
 
 # -------------------------------------------------------------- engine level
@@ -162,37 +163,37 @@ def test_maintain_is_semantically_invisible(spark, tmp_path):
 
 
 def test_host_bucket_partitioning(spark, tmp_path):
-    """Frontier parts are dir-partitioned on pmod(xxhash64(host), N) — the
-    Iceberg bucket(N, host) analogue: per-host scans prune at the partition
-    level (PartitionFilters in the plan, subset of files read), and the
-    layout survives compaction."""
+    """The frontier's bucket(16, host) layout is a hidden partition spec:
+    reads return exactly FRONTIER_COLS, every part (compacted ones too)
+    records the spec and is dir-partitioned on its bucket column
+    consistently with pmod(xxhash64(host), 16), and a per-host
+    prune_read prunes at the partition level (PartitionFilters on the
+    bucket column) and returns exactly that host's rows."""
     eng = _run(_engine(spark, tmp_path / "hb", compact_every=1), spark)
+    spec = {"col": "host", "buckets": 16, "name": "host_b16"}
+    assert eng.store.read(FRONTIER).columns == FRONTIER_COLS
+    parts = eng.store.parts(FRONTIER)
+    assert any(p["round"] is None for p in parts)  # compaction ran
     tdir = os.path.join(str(tmp_path / "hb"), FRONTIER)
-    for p in eng.store.parts(FRONTIER):
-        subdirs = os.listdir(os.path.join(tdir, p["path"]))
-        assert any(s.startswith("host_bucket=") for s in subdirs), p
+    for p in parts:
+        assert p["spec"] == spec, p
+        raw = spark.read.parquet(os.path.join(tdir, p["path"]))
+        assert raw.columns == FRONTIER_COLS + ["host_b16"], p
+        bad = raw.filter(
+            F.col("host_b16") != F.pmod(F.xxhash64("host"), F.lit(16)).cast("int")
+        ).count()
+        assert bad == 0, p
 
-    scan = eng.store.read(FRONTIER).filter(F.col("host_bucket") == 3)
+    frontier = eng.store.read(FRONTIER)
+    host = frontier.groupBy("host").count().orderBy(F.desc("count"), "host").first().host
+    scan = eng.store.prune_read(FRONTIER, host)
     # the bucket predicate lands in PartitionFilters (dir-level pruning),
     # not just PushedFilters — the scan never opens other buckets' files
     plan = scan._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert plan.split("PartitionFilters")[1].split("]")[0].count("host_bucket") >= 1
-    # bucket scan returns exactly the rows whose host hashes there, and
-    # covers a strict, non-empty subset of the table
-    total = eng.store.read(FRONTIER).count()
-    got = scan.count()
-    assert 0 < got < total
-    # the bucket column is consistent with its definition
-    bad = (
-        eng.store.read(FRONTIER)
-        .filter(
-            F.col("host_bucket")
-            != F.pmod(F.xxhash64("host"), F.lit(16)).cast("int")
-        )
-        .count()
-    )
-    assert bad == 0
+    assert re.search(r"PartitionFilters: \[[^\]]*\bhost_b16#", plan), plan
+    assert scan.columns == FRONTIER_COLS
+    want = sorted(map(tuple, frontier.filter(F.col("host") == host).collect()))
+    assert want and sorted(map(tuple, scan.collect())) == want
 
 
 def test_kill_after_maintain_resumes_exactly(spark, tmp_path):
@@ -382,9 +383,9 @@ def test_partition_spec_evolution_reads_and_prunes(spark, tmp_path):
     df2 = spark.createDataFrame(rows2, "host: string, seq: long")
 
     store.set_partition_spec(t, "host", 4)
-    store.append_bucketed(t, df1, round_no=1)
+    store.append(t, df1, round_no=1)
     store.set_partition_spec(t, "host", 8)  # metadata-only evolution
-    store.append_bucketed(t, df2, round_no=2)
+    store.append(t, df2, round_no=2)
 
     # logical schema is spec-free, all rows present
     full = store.read(t)
@@ -405,23 +406,32 @@ def test_partition_spec_evolution_reads_and_prunes(spark, tmp_path):
     plan = store.prune_read(t, "h3")._jdf.queryExecution().executedPlan().toString()
     assert "host_b4" in plan and "host_b8" in plan
 
-    # appends without a spec still refuse loudly
+    # a table without a spec gets plain parts and refuses to prune loudly
     store2 = TableStore(spark, str(tmp_path / "specs2"))
+    store2.append("nospec", df1)
+    assert "spec" not in store2.parts("nospec")[0]
     with pytest.raises(ValueError):
-        store2.append_bucketed("nospec", df1)
+        store2.prune_read("nospec", "h3")
 
 
 def test_partition_spec_survives_unrelated_commits(spark, tmp_path):
-    """The spec is manifest metadata: plain appends/snapshots carry it
-    forward, so an evolve is never silently lost."""
+    """The spec is manifest metadata: every write path carries it forward
+    and lays its part out under it, so an evolve is never silently lost
+    and no write leaves an unbucketed part behind."""
     store = TableStore(spark, str(tmp_path / "specs3"))
     t = "tbl"
+    spec = {"col": "host", "buckets": 4, "name": "host_b4"}
     df = spark.createDataFrame([("h1", 1)], "host: string, seq: long")
     store.set_partition_spec(t, "host", 4)
-    store.append_bucketed(t, df)
-    store.append(t, df.withColumn("seq", F.lit(2)))  # plain append, no spec path
-    assert store.partition_spec(t) == {"col": "host", "buckets": 4, "name": "host_b4"}
-    assert store.read(t).count() == 2
+    store.append(t, df)
+    store.replace_round(t, df.withColumn("seq", F.lit(2)), round_no=0)
+    assert store.partition_spec(t) == spec
+    assert [p["spec"] for p in store.parts(t)] == [spec, spec]
+    assert sorted(r.seq for r in store.read(t).collect()) == [1, 2]
+    store.write_snapshot(t, store.read(t))
+    assert [p["spec"] for p in store.parts(t)] == [spec]
+    assert store.read(t).columns == ["host", "seq"]
+    assert sorted(r.seq for r in store.prune_read(t, "h1").collect()) == [1, 2]
 
 
 def test_compact_keeps_partition_spec_hidden_and_prunable(spark, tmp_path):
@@ -443,8 +453,8 @@ def test_compact_keeps_partition_spec_hidden_and_prunable(spark, tmp_path):
         return re.search(r"PartitionFilters: \[[^\]]*\b" + bucket_col + "#", plan)
 
     store.set_partition_spec(t, "host", 4)
-    store.append_bucketed(t, rows(0), round_no=1)
-    store.append_bucketed(t, rows(50), round_no=2)
+    store.append(t, rows(0), round_no=1)
+    store.append(t, rows(50), round_no=2)
     assert store.read_parts(t, 1).columns == ["host", "seq"]
     assert store.read_parts_range(t, 1, 2).columns == ["host", "seq"]
     mani_b4 = store.current_snapshot(t)
@@ -457,7 +467,7 @@ def test_compact_keeps_partition_spec_hidden_and_prunable(spark, tmp_path):
     assert pruned_on("host_b4")
 
     store.set_partition_spec(t, "host", 8)
-    store.append_bucketed(t, rows(100), round_no=3)
+    store.append(t, rows(100), round_no=3)
     before = sorted(map(tuple, store.read(t).collect()))
     assert store.compact(t, target_bytes=1 << 30) is not None
     (merged,) = store.parts(t)

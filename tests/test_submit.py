@@ -42,5 +42,4 @@ def test_submit_parser_defaults_are_cluster_safe():
     args = ap.parse_args(["--store", "/x"])
     # defaults must never force a master or a local path convention
     assert args.rounds == 5
-    assert args.host_buckets == 16
     assert args.limit == 0

@@ -62,8 +62,6 @@ def build_parser() -> argparse.ArgumentParser:
     ap.add_argument("--limit", type=int, default=0, help="P2 global limit, 0=unlimited")
     ap.add_argument("--compact-every", type=int, default=0,
                     help="run table maintenance every K rounds (0=off)")
-    ap.add_argument("--host-buckets", type=int, default=16,
-                    help="frontier dir-partition buckets on host (0=off)")
     ap.add_argument("--no-politeness", action="store_true",
                     help="skip the synthetic per-host politeness table")
     ap.add_argument("--no-robots", action="store_true",
@@ -86,7 +84,6 @@ def run_job(spark, args) -> list[dict]:
             round_ms=args.round_ms,
             limit=args.limit,
             compact_every=args.compact_every,
-            host_buckets=args.host_buckets,
         ),
     )
     eng.bootstrap(_seeds(spark, args.seeds))
