@@ -7,8 +7,8 @@ file:line in docstrings). The reference is an Akka actor/stream pipeline;
 this engine re-expresses every one of its dataflow operators as idiomatic
 Spark DataFrame plans (see SURVEY.md §2 for the operator-by-operator map):
 
-- frontier source / dedup / existence anti-join  -> window dedup + bloom-
-  prefiltered ``left_anti`` join          (reference MavenDiscoveryProcess)
+- frontier source / dedup / existence anti-join  -> window dedup + hash-
+  probed ``left_anti`` join               (reference MavenDiscoveryProcess)
 - politeness throttle / priority / limit -> per-host window-rank token
   bucket, pure column math               (reference Configuration.scala:80)
 - fetch + per-doc analysis               -> vectorized pandas/Arrow UDFs

@@ -28,7 +28,7 @@ Key columns (pure JVM-side Spark functions, zero Python):
   - ``host_rev``  reversed host labels (com.example.www) — north-rule key
   - ``url_hash``  Spark ``hash()`` = 32-bit Murmur3 (the north rule's
                   murmur3 requirement)
-  - ``url_hash64`` ``xxhash64()`` — bloom-filter key
+  - ``url_hash64`` ``xxhash64()`` — the seen confirm's probe key
 """
 
 from __future__ import annotations
@@ -213,7 +213,7 @@ def url_hash_col(url: Column) -> Column:
 
 
 def url_hash64_col(url: Column) -> Column:
-    """xxhash64 — the 64-bit bloom-filter key."""
+    """xxhash64 — the 64-bit seen-confirm probe key."""
     return F.xxhash64(url)
 
 
@@ -222,7 +222,7 @@ def with_url_keys(df, url_col_name: str = "url", minimal: bool = False):
 
     ``minimal=True`` attaches only the two keys the SCHEDULING core
     consumes (``host`` for robots/politeness, ``url_hash64`` for the
-    bloom/anti-join) — the frontier-append-only keys (``host_rev``,
+    seen anti-join) — the frontier-append-only keys (``host_rev``,
     murmur3 ``url_hash``) are then attached by
     :func:`complete_url_keys` AFTER dedup/anti-join, on the O(new) rows.
     Rationale: ``first_occurrence_dedup``'s min_by struct carries every

@@ -4,7 +4,7 @@ The reference does all of its joins procedurally — lookup loops against the
 store or sequential walks over dependency lists. Each maps to one Spark
 join shape:
 
-- J1 existence anti-join      -> ``seen.seen_anti_join`` (bloom-prefiltered)
+- J1 existence anti-join      -> ``seen.seen_anti_join`` (hash-probed)
 - J2 identity lookup          -> ``left_semi`` (implicit inside MERGE)
 - J3 edge-in-store semi-join  -> ``semi_anti_split`` below
 - J4 first-match ordered join -> ``first_match_join`` below

@@ -1,5 +1,6 @@
-"""URL-seen membership: partitioned Bloom bitsets + exact anti-join
-(reference parity: F1 seen-cache two-tier shape, F2/J1 existence anti-join).
+"""URL-seen membership: exact hash-probed anti-join + partitioned Bloom
+bitsets (reference parity: F1 seen-cache two-tier shape, F2/J1 existence
+anti-join).
 
 The reference checks candidate identifiers in two tiers: a cheap local
 HashSet ("local seen cache to compensate for lags",
@@ -9,27 +10,26 @@ on lookup failure treat as NOT seen (crawl-again bias).
 
 North-rule realization at 10^10-URL scale:
 
-1. **Bloom bitsets built with treeAggregate.** Per-partition numpy bitsets
-   over ``xxhash64(url)`` OR-merged tree-wise (depth log(partitions)), then
-   **broadcast** to every executor. This is the only RDD-level custom
-   aggregate in the engine; bit setting is numpy-vectorized
-   (``bitwise_or.at``), not per-row Python.
-2. **Vectorized prefilter, O(round) Python.** A pandas UDF tests k
-   double-hashed positions per Arrow batch of the round's candidates only.
-   It is marked nondeterministic, so Catalyst cannot infer a copy of it onto
-   the seen side of the confirm's equi-join on ``url_hash64``.
-3. **Exact confirm that scans the seen side once, never shuffles it.** The
-   bloom-positive candidates' 8-byte hashes are broadcast into a
-   ``left_semi`` probe of the plain seen-set scan; the rows it keeps are
-   the hits. The result is ``candidates LEFT ANTI broadcast(hits)`` on
-   ``[url_hash64, url]``: the full URL string is in the key, so a 64-bit
-   collision can never drop a distinct URL, and a bloom-negative
-   candidate's hash is not in the seen set, so it can never match a hit.
-   The bloom only bounds the two broadcast build sides to O(bloom-positive
-   candidates of one round); it never changes the result (property-tested).
+1. **Exact confirm that scans the seen side once, never shuffles it.** The
+   candidates' 8-byte hashes are broadcast into a ``left_semi`` probe of
+   the plain seen-set scan; the rows it keeps are the hits. The result is
+   ``candidates LEFT ANTI broadcast(hits)`` on ``[url_hash64, url]``: the
+   full URL string is in the key, so a 64-bit collision can never drop a
+   distinct URL. Both build sides are O(candidates of one round), so the
+   seen set needs no derived membership state; this is the engine's path.
+2. **Optional prefilter.** A bloom (or cuckoo, ``operators/cuckoo.py``)
+   probe may shrink the first broadcast to the filter-positive candidates;
+   a filter-negative candidate's hash is not in the seen set, so it can
+   never match a hit, and the result is unchanged (property-tested). The
+   probe is a pandas UDF over the candidates only, marked
+   nondeterministic, so Catalyst cannot infer a copy of it onto the seen
+   side of the confirm's equi-join on ``url_hash64``.
+3. **Bloom bitsets built with a tree fold.** Per-partition numpy bitsets
+   over ``xxhash64(url)`` OR-merged tree-wise, then **broadcast** to every
+   executor; bit setting is numpy-vectorized (``bitwise_or.at``), not
+   per-row Python.
 
-Fail-open: like the reference's crawl-again bias, a missing/empty bloom
-degrades to the plain exact anti-join.
+A frame without the hash column takes the plain exact anti-join on the url.
 """
 
 from __future__ import annotations
@@ -115,10 +115,9 @@ def build_bloom_segment(
     tree_depth: int = 2,
 ) -> BloomBits:
     """Build an OR-mergeable bloom SEGMENT with fixed geometry (m bits, k
-    probes) from only ``df``'s rows. This is the incremental-maintenance
-    primitive: the engine persists the merged words each round and ORs in a
-    segment built from just that round's appends — the bloom build scans
-    O(new rows), never the full 10^10-row frontier (round-1 scale-killer #3).
+    probes) from only ``df``'s rows. Segments of one geometry OR-merge
+    (``BloomBits.merge``), so a bloom over an append-only table can grow by
+    a segment over just the appended rows instead of a full rebuild.
     """
     spark = df.sparkSession
 
@@ -200,35 +199,33 @@ def confirm_anti_join(
     url_col: str = "url",
     hash64_col: str = "url_hash64",
 ) -> DataFrame:
-    """Exact ``candidates LEFT ANTI seen`` behind a membership prefilter.
+    """Exact ``candidates LEFT ANTI seen``, probed by hash. With
+    ``hash64_col`` on both sides the confirm is:
 
-    ``maybe_seen`` is a boolean Column over the candidates with no false
-    negatives (a bloom or cuckoo probe, marked nondeterministic). With it
-    and ``hash64_col`` on both sides, the confirm is:
-
-        hits = seen ⋉ broadcast(hash64 of maybe_seen candidates)
+        hits = seen ⋉ broadcast(hash64 of the probing candidates)
         new  = candidates ▷ broadcast(hits)     on [hash64, url]
 
+    The probing candidates are all of them, or only those ``maybe_seen``
+    keeps when it is given: a boolean Column over the candidates with no
+    false negatives (a bloom or cuckoo probe, marked nondeterministic).
     The seen side is scanned once in the JVM and never shuffled or sent
-    through Python; both broadcast build sides are O(prefilter-positive
-    candidates of one round), the first only 8-byte hashes. Exact: a
-    candidate in the seen set is prefilter-positive, so its seen row is a
-    hit; the url is in the anti-join key, so a hash collision never drops
-    a distinct URL. The ``hash64 == xxhash64(url)`` precondition this
-    relies on is asserted on the candidates and the hits.
+    through Python; both broadcast build sides are O(candidates of one
+    round), the first only 8-byte hashes. Exact: a candidate in the seen
+    set probes, so its seen row is a hit; the url is in the anti-join key,
+    so a hash collision never drops a distinct URL. The
+    ``hash64 == xxhash64(url)`` precondition this relies on is asserted on
+    the candidates and the hits.
 
-    Without a prefilter, or when the seen side has no hash column, this is
-    the plain anti-join (keyed on [hash64, url] when both sides carry the
-    hash: SMJ compares fixed-width longs first and the url only on a tie).
+    When either side has no hash column this is the plain sort-merge
+    anti-join on the url.
     """
     if seen is None:
         return candidates
-    keyed = hash64_col in candidates.columns and hash64_col in seen.columns
-    join_key = [hash64_col, url_col] if keyed else [url_col]
-    if maybe_seen is None or not keyed:
-        return candidates.join(seen.select(*join_key), join_key, "left_anti")
+    if hash64_col not in candidates.columns or hash64_col not in seen.columns:
+        return candidates.join(seen.select(url_col), url_col, "left_anti")
+    join_key = [hash64_col, url_col]
     cand = _hash_checked(candidates, url_col, hash64_col)
-    probe = cand.filter(maybe_seen).select(hash64_col)
+    probe = (cand if maybe_seen is None else cand.filter(maybe_seen)).select(hash64_col)
     hits = _hash_checked(
         seen.select(*join_key).join(F.broadcast(probe), hash64_col, "left_semi"),
         url_col, hash64_col,
@@ -243,14 +240,15 @@ def seen_anti_join(
     url_col: str = "url",
     hash64_col: str = "url_hash64",
 ) -> DataFrame:
-    """Keep candidates NOT in the seen set (F2/J1): ``confirm_anti_join``
-    with the bloom probe as its prefilter (plain exact anti-join without a
-    bloom). Result is identical in every path (property-tested); only the
-    scanned, broadcast and shuffled volumes differ.
+    """Keep candidates NOT in the seen set (F2/J1): ``confirm_anti_join``,
+    with the bloom probe as its prefilter when ``bloom`` is given. Without
+    one every candidate's hash probes the seen scan; the result is
+    identical either way (property-tested), only the broadcast volume
+    differs.
 
     Precondition: ``hash64_col`` must equal ``xxhash64(url_col)`` on both
-    sides (as ``with_url_keys`` attaches it). With a bloom the job fails
-    on a candidate or hit row that breaks it.
+    sides (as ``with_url_keys`` attaches it). With the hash column on both
+    sides the job fails on a candidate or hit row that breaks it.
     """
     maybe_seen = None
     if bloom is not None and seen is not None:

@@ -16,9 +16,8 @@ Ours is the same dataflow as **iterated batch over manifest tables**
       -> fetch (deterministic URL->doc join over the docs corpus — the
          sandbox stand-in for the HTTP fetch UDF, S3)
       -> link extraction in span order (the POM-dependency analogue)
-      -> canonicalize -> robots gate -> F1 dedup -> bloom-prefiltered
+      -> canonicalize -> robots gate -> F1 dedup -> hash-probed exact
          anti-join vs frontier (F2/J1) -> frontier APPEND (O(new links))
-      -> incremental bloom: OR in a segment built from ONLY the new rows
       -> per-partition metrics replace-round (A5) -> checkpoint row (LAST)
 
 Every emitted ordering is a total order with the ``seq`` tiebreak, so the
@@ -42,23 +41,18 @@ now structural:
 - **No unpartitioned windows.** The global seq over discovered links is
   range-partition + partition-local sort + driver prefix-sum offsets
   (operators/ordering.py) — same bytes, no single-task sort.
-- **Full bloom rebuilds only at capacity growth and process start.** The
-  bloom is in-memory derived state (the exact anti-join confirm is the
-  source of truth); the checkpoint keeps only its geometry and counts.
-  Each round ORs in a segment built from only that round's appended rows
-  (BloomBits segments are OR-mergeable). A full rebuild happens when the
-  item count outgrows capacity (amortized, geometric growth) and when a
-  process without the carried bloom resumes (one segment over the
-  checkpointed frontier's ``url_hash64``, bit-identical to the carry).
+- **No derived seen-set state.** The frontier table is the seen set; no
+  membership filter is built, carried or rebuilt, so a fresh process
+  resumes from the checkpoint with no pass over the frontier.
 - **Every per-round Python UDF and shuffle is O(round).** The fetch cuts
   the docs corpus to the round's doc_ids with a broadcast ``left_semi``
   (build side O(admitted)) before link extraction, so canonicalization
   runs on the fetched docs' links only. The seen-set confirm broadcasts
-  the bloom-positive candidates' 8-byte ``url_hash64`` into a
-  ``left_semi`` probe of the frontier scan, then anti-joins the candidates
-  against those hits, broadcast too (both build sides O(bloom-positive
-  candidates of one round)): the frontier is scanned once per round by the
-  JVM, never shuffled and never sent through Python (operators/seen.py).
+  the candidates' 8-byte ``url_hash64`` into a ``left_semi`` probe of the
+  frontier scan, then anti-joins the candidates against those hits,
+  broadcast too (both build sides O(candidates of one round)): the
+  frontier is scanned once per round by the JVM, never shuffled and never
+  sent through Python (operators/seen.py).
 """
 
 from __future__ import annotations
@@ -84,11 +78,8 @@ from delphi_crawler_spark.operators.politeness import (
     prune_pending_topk,
 )
 from delphi_crawler_spark.operators.robots import robots_filter
-from delphi_crawler_spark.operators.seen import (
-    BloomBits,
-    build_bloom_segment,
-    seen_anti_join,
-)
+# imported for perfbench: its tracer wraps the first name in this module
+from delphi_crawler_spark.operators.seen import build_bloom_segment, seen_anti_join  # noqa: F401
 from delphi_crawler_spark.storage.tablestore import TableStore
 
 FRONTIER = "frontier"   # append-only: every URL ever admitted (the seen set)
@@ -141,8 +132,6 @@ def candidate_urls(
 class CrawlConfig:
     round_ms: int = 10_000
     limit: int = 0  # P2: 0 = unlimited (reference Configuration.scala:79)
-    bloom_fpp: float = 0.01
-    bloom_growth: int = 4  # capacity headroom factor at (re)build
     n_docs: int | None = None  # size of the synthetic fetch corpus
     compact_every: int = 0  # run table maintenance every K rounds (0 = off)
     compact_target_bytes: int = 128 << 20
@@ -165,10 +154,6 @@ class CrawlEngine:
         self.politeness = politeness
         self.robots = robots
         self.cfg = config or CrawlConfig()
-        # in-memory carry of the merged bloom between rounds, keyed by the
-        # checkpoint bloom meta it corresponds to; the bloom is never
-        # persisted — _load_bloom rebuilds it when the key misses
-        self._bloom_cache: tuple[dict, BloomBits] | None = None
 
     def _rollback(self, last: dict | None) -> None:
         """Roll FRONTIER and FETCHED back to the snapshots the checkpoint
@@ -180,43 +165,6 @@ class CrawlEngine:
             snap = last.get(key)
             if snap and self.store.current_snapshot(tbl) != snap:
                 self.store.restore(tbl, snap)
-
-    # ------------------------------------------------------------- bloom
-    def _frontier_bloom(self, m_bits: int, k: int) -> BloomBits:
-        """One segment over the whole frontier's ``url_hash64``."""
-        return build_bloom_segment(
-            self.store.read(FRONTIER).select("url_hash64"), m_bits, k
-        )
-
-    def _sized_bloom(self, items: int, round_no: int) -> dict:
-        """Full build with ``bloom_growth`` headroom over ``items``
-        (bootstrap and capacity growth); returns the checkpoint meta."""
-        capacity = max(1024, self.cfg.bloom_growth * items)
-        proto = BloomBits.sized(capacity, self.cfg.bloom_fpp)
-        return self._carry(
-            self._frontier_bloom(proto.m_bits, proto.k), round_no, items, capacity
-        )
-
-    def _carry(self, bloom: BloomBits, round_no: int, items: int, capacity: int) -> dict:
-        """Keep ``bloom`` in memory as the bloom of the returned meta — the
-        geometry and counts the checkpoint records in place of the bits."""
-        meta = {
-            "round": round_no, "m": bloom.m_bits, "k": bloom.k,
-            "items": items, "capacity": capacity,
-        }
-        self._bloom_cache = (meta, bloom)
-        return meta
-
-    def _load_bloom(self, meta: dict | None) -> BloomBits | None:
-        """The bloom the checkpoint ``meta`` describes: the in-memory carry
-        when this process produced it, else one segment over the frontier
-        (run_round has restored it to the checkpoint snapshot by now) —
-        bit-identical, since segments OR-merge."""
-        if not meta:
-            return None
-        if self._bloom_cache is None or self._bloom_cache[0] != meta:
-            self._bloom_cache = (meta, self._frontier_bloom(meta["m"], meta["k"]))
-        return self._bloom_cache[1]
 
     # ------------------------------------------------------------ bootstrap
     def bootstrap(self, seeds: DataFrame) -> None:
@@ -240,20 +188,14 @@ class CrawlEngine:
             F.lit(-1).alias("round"),
         )
         snap = self.store.write_snapshot(FRONTIER, frontier)
-        # one bootstrap-time pass over the written part: max seq (the global
-        # monotonic sequence continues from here) + item count (bloom sizing)
-        agg = self.store.read(FRONTIER).agg(
-            F.max("seq").alias("mx"), F.count(F.lit(1)).alias("n")
-        ).collect()[0]
-        max_seq, n_items = int(agg.mx or 0), int(agg.n)
-        bloom_meta = self._sized_bloom(n_items, -1)
+        # the global monotonic sequence continues from the seeds' max seq
+        max_seq = self.store.read(FRONTIER).agg(F.max("seq")).collect()[0][0]
         # round -1 checkpoint anchors exact resume of round 0
         self.store.checkpoint(-1, {
             "emitted_total": 0,
-            "max_seq": max_seq,
+            "max_seq": int(max_seq or 0),
             "frontier_snap": snap,
             "fetched_snap": None,
-            "bloom": bloom_meta,
         })
 
     # -------------------------------------------------------------- a round
@@ -323,11 +265,10 @@ class CrawlEngine:
             )
 
         n_new_links = 0
-        bloom_meta = (last or {}).get("bloom")
         max_seq = (last or {}).get("max_seq", 0)
         if docs is not None and n_admitted > 0:
-            n_new_links, max_seq, bloom_meta = self._discover(
-                round_no, scheduled, docs, max_seq, bloom_meta
+            n_new_links, max_seq = self._discover(
+                round_no, scheduled, docs, max_seq
             )
 
         # A5 per-partition lineage + metrics
@@ -342,7 +283,6 @@ class CrawlEngine:
             "emitted_total": (last.get("emitted_total", 0) if last else 0) + n_admitted,
             "max_seq": max_seq,
             **{key: self.store.current_snapshot(t) for t, key in SNAP_KEYS.items()},
-            "bloom": bloom_meta,
         }
         self.store.checkpoint(round_no, stats)  # commit point — written LAST
         return {"round": round_no, **stats}
@@ -354,10 +294,9 @@ class CrawlEngine:
         scheduled: DataFrame,
         docs: DataFrame,
         max_seq: int,
-        bloom_meta: dict | None,
-    ) -> tuple[int, int, dict | None]:
+    ) -> tuple[int, int]:
         """Fetch + extract + admit new links into the frontier. Returns
-        (n_new, new_max_seq, new_bloom_meta)."""
+        (n_new, new_max_seq)."""
         n_docs = self.cfg.n_docs or docs.count()
         # S3 fetch: deterministic URL -> doc mapping (crc32, reproducible in
         # the pure-Python oracle); production swaps this join for the
@@ -388,8 +327,8 @@ class CrawlEngine:
         cand = candidate_urls(raw, self.robots, ["parent_seq", "span_pos"])
 
         seen = self.store.read(FRONTIER).select("url", "url_hash64")
-        bloom = self._load_bloom(bloom_meta)
-        fresh = complete_url_keys(seen_anti_join(cand, seen, bloom))
+        # positional None (no prefilter): the perfbench tracer unpacks three
+        fresh = complete_url_keys(seen_anti_join(cand, seen, None))
 
         # deterministic new seq over the SURVIVORS, continuing the global
         # monotonic sequence in (parent_seq, span_pos) discovery order (S1):
@@ -411,23 +350,8 @@ class CrawlEngine:
                 F.lit(round_no).alias("round"),
             )
             self.store.append(FRONTIER, new_rows, round_no=round_no)
-            if bloom is not None:
-                items = bloom_meta["items"] + n_new
-                if items > bloom_meta["capacity"]:
-                    # amortized geometric rebuild: full scan, new capacity
-                    bloom_meta = self._sized_bloom(items, round_no)
-                else:
-                    # incremental maintenance: segment over ONLY the
-                    # appended part (scanned back from the manifest)
-                    seg = build_bloom_segment(
-                        self.store.read_parts(FRONTIER, round_no).select("url_hash64"),
-                        bloom.m_bits, bloom.k,
-                    )
-                    bloom_meta = self._carry(
-                        bloom.merge(seg), round_no, items, bloom_meta["capacity"]
-                    )
         release()
-        return n_new, max_seq + n_new, bloom_meta
+        return n_new, max_seq + n_new
 
     # ---------------------------------------------------------- maintenance
     def maintain(
@@ -448,9 +372,6 @@ class CrawlEngine:
            amend still resumes from the old manifest);
         4. ``expire`` old manifests + orphan parts, protecting the amended
            checkpoint's manifests.
-
-        The bloom is untouched: it is in-memory state over the frontier's
-        rows, which compaction rewrites but does not change.
         """
         tb = target_bytes or self.cfg.compact_target_bytes
         last = self.store.last_checkpoint()

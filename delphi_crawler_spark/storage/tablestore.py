@@ -207,7 +207,11 @@ class TableStore:
         the Iceberg hidden-partitioning contract that makes
         ``set_partition_spec`` evolution invisible to readers. With
         ``prune`` set, such a part is first filtered to the bucket of that
-        key value under ITS OWN spec (``prune_read``)."""
+        key value under ITS OWN spec (``prune_read``). A manifest with no
+        parts (``set_partition_spec`` on a new table commits one) has no
+        schema to scan, so it raises like a table with no manifest."""
+        if not parts:
+            raise FileNotFoundError(f"table {table!r} has no committed parts")
         frames = []
         for p in parts:
             f = self.spark.read.parquet(os.path.join(self._tdir(table), p["path"]))
@@ -279,8 +283,8 @@ class TableStore:
 
     def read_parts(self, table: str, round_no: int) -> DataFrame:
         """Scan only the parts tagged with ``round_no`` — manifest-level
-        partition pruning (O(that round's data), used for incremental bloom
-        maintenance)."""
+        partition pruning: O(that round's data), e.g. one round's frontier
+        append."""
         parts = [p for p in self.parts(table) if p.get("round") == round_no]
         if not parts:
             return self.read(table).limit(0)

@@ -200,8 +200,9 @@ def frontier_dedup_stream(
     evicts it once the event-time watermark passes, so state is
     O(keys-per-horizon), never O(all URLs ever seen). Re-discoveries
     separated by more than the horizon re-emit by design — the durable
-    forever-seen set stays the bloom + frontier table in the batch round
-    loop (operators/seen.py); this stage exists to keep intra-horizon
+    forever-seen set stays the frontier table in the batch round loop,
+    confirmed by the exact anti-join (operators/seen.py); this stage exists
+    to keep intra-horizon
     duplicate floods (the common case: a URL re-linked thousands of times
     within minutes) from ever reaching it."""
     return urls.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark([key])

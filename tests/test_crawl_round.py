@@ -76,8 +76,15 @@ def _run_engine(spark, root, n_rounds=N_ROUNDS) -> CrawlEngine:
     return eng
 
 
-def test_ordering_and_seen_match_oracle(spark, tmp_path, oracle_result):
-    eng = _run_engine(spark, tmp_path / "store")
+@pytest.fixture(scope="module")
+def clean_engine(spark, tmp_path_factory):
+    """One uninterrupted N_ROUNDS crawl, shared by the tests that compare
+    against it."""
+    return _run_engine(spark, tmp_path_factory.mktemp("store_clean"))
+
+
+def test_ordering_and_seen_match_oracle(clean_engine, oracle_result):
+    eng = clean_engine
     got = eng.schedule_rows()
     assert got == oracle_result.schedule, (
         f"first diff at {next(i for i, (a, b) in enumerate(zip(got, oracle_result.schedule)) if a != b) if got != oracle_result.schedule and len(got) == len(oracle_result.schedule) else 'len'}: "
@@ -99,12 +106,10 @@ def test_parallelism_invariance(spark, tmp_path, oracle_result):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def test_resume_equivalence_mid_round_kill(spark, tmp_path, oracle_result):
+def test_resume_equivalence_mid_round_kill(spark, tmp_path, oracle_result, clean_engine):
     """Kill after the schedule append + frontier mutation of round 1 but
     before its checkpoint; a fresh engine must resume and produce tables
-    byte-equal to the uninterrupted run (SURVEY.md §5d). The bloom is not
-    persisted, so the fresh engine rebuilds it cold from the checkpointed
-    frontier; that bloom must be byte-identical to the carried one."""
+    byte-equal to the uninterrupted run (SURVEY.md §5d)."""
     root = tmp_path / "store_kill"
     eng = CrawlEngine(
         spark, str(root),
@@ -138,7 +143,7 @@ def test_resume_equivalence_mid_round_kill(spark, tmp_path, oracle_result):
     assert eng2.seen_set() == oracle_result.seen
     # full frontier content equality with an uninterrupted run (merge-on-read
     # view: append-only frontier ∪ fetched log)
-    clean = _run_engine(spark, tmp_path / "store_clean")
+    clean = clean_engine
     cols = ["url", "priority", "seq", "state", "round"]
     killed_rows = sorted(map(tuple, eng2.frontier_view().select(cols).collect()))
     clean_rows = sorted(map(tuple, clean.frontier_view().select(cols).collect()))
@@ -150,25 +155,12 @@ def test_resume_equivalence_mid_round_kill(spark, tmp_path, oracle_result):
         eng2.frontier_view().select(cols), clean.frontier_view().select(cols)
     )
 
-    # bloom: the clean run carried its bloom in memory through every round;
-    # eng2 rebuilt its own cold at round 1 and carried it from there; a
-    # third engine builds one cold from the final checkpoint
-    meta = clean.store.last_checkpoint()["bloom"]
-    assert eng2.store.last_checkpoint()["bloom"] == meta
-    assert clean._bloom_cache[0] == meta  # carried, never rebuilt
-    carried = clean._load_bloom(meta)
-    cold = CrawlEngine(spark, str(root))._load_bloom(meta)
-    for bloom in (eng2._load_bloom(meta), cold):
-        assert (bloom.m_bits, bloom.k) == (carried.m_bits, carried.k)
-        assert bloom.words.tobytes() == carried.words.tobytes()
-
 
 def test_bootstrap_kill_at_checkpoint_resumes_exactly(spark, tmp_path, oracle_result):
     """Kill bootstrap at its commit point, the round -1 checkpoint, after
     the frontier snapshot is written: a fresh engine must redo bootstrap
     rather than skip it on the existing frontier, so the crawl still
-    matches the oracle and carries a bloom (round 0 continues the seed
-    seq, not 0)."""
+    matches the oracle and round 0 continues the seed seq, not 0."""
     root = tmp_path / "store_boot_kill"
     eng = CrawlEngine(
         spark, str(root),
@@ -185,7 +177,6 @@ def test_bootstrap_kill_at_checkpoint_resumes_exactly(spark, tmp_path, oracle_re
     eng2 = _run_engine(spark, root)  # fresh engine: bootstrap + every round
     assert eng2.schedule_rows() == oracle_result.schedule
     assert eng2.seen_set() == oracle_result.seen
-    assert eng2.store.last_checkpoint()["bloom"] is not None
     seqs = eng2.store.read("frontier").agg(
         F.count("seq").alias("n"), F.count_distinct("seq").alias("d")
     ).collect()[0]
@@ -309,37 +300,6 @@ def test_write_volume_flat_over_many_rounds(spark, tmp_path):
     assert late < 2.0 * early, (early, late, bytes_per_row)
 
 
-def test_bloom_is_maintained_incrementally(spark, tmp_path):
-    """Scale invariant (round-1 scale-killer #3): the bloom's item count
-    tracks the frontier exactly via OR-merged per-round segments — no
-    full-table rebuild below capacity — and only its geometry and counts
-    reach the checkpoint: no round writes the bitset."""
-    import os
-
-    root = tmp_path / "store_bloom"
-    eng = CrawlEngine(
-        spark, str(root),
-        politeness=politeness_df(spark), robots=robots_df(spark),
-        config=CrawlConfig(round_ms=ROUND_MS, n_docs=N_DOCS),
-    )
-    eng.bootstrap(seed_urls_df(spark, n=N_SEEDS))
-    docs = docs_df(spark, n=N_DOCS)
-    metas = [eng.store.last_checkpoint()["bloom"]]
-    assert metas[0]["round"] == -1
-    for rnd in range(N_ROUNDS):
-        stats = eng.run_round(rnd, docs=docs)
-        meta = stats["bloom"]
-        assert meta["items"] == eng.store.read("frontier").count()
-        assert meta["round"] == rnd  # coverage advances every round
-        assert meta["items"] == metas[-1]["items"] + stats["new_links"]
-        metas.append(meta)
-    # same geometry across rounds (pure OR-merge, no rebuild under capacity)
-    assert metas[-1]["m"] > 0
-    assert {(m["m"], m["k"]) for m in metas} == {(metas[0]["m"], metas[0]["k"])}
-    assert set(metas[-1]) == {"round", "m", "k", "items", "capacity"}
-    assert not os.path.exists(os.path.join(str(root), "blobs"))
-
-
 def _plan_nodes(plan: str) -> list[tuple[int, str]]:
     """(depth, node) per line of the final adaptive plan of a tree string,
     codegen stage markers stripped."""
@@ -374,7 +334,8 @@ def test_engine_round_plan_is_o_round(spark, tmp_path):
     executed plan of the frame the round appends to the frontier,
     - the frontier scan feeding the seen confirm reaches its join with no
       Exchange, Python UDF or hash check in between (scanned once by the
-      JVM, never shuffled, probed in Python or rehashed);
+      JVM, never shuffled, probed in Python or rehashed), and no
+      membership-filter probe (``_might_contain``) runs in that plan;
     - the docs scan is cut by the round's doc_ids (LeftSemi) before any
       Python UDF, so canonicalization sees only the fetched docs.
     Half the docs' links are seeded, so round 0's confirm has true hits and
@@ -420,6 +381,7 @@ def test_engine_round_plan_is_o_round(spark, tmp_path):
     stats = eng.run_round(0, docs=spark.read.parquet(docs_path))
     assert stats["new_links"] > 0 and len(plans) == 1
     nodes = _plan_nodes(plans[0])
+    assert "_might_contain" not in plans[0]
 
     frontier = [i for i, (_, n) in enumerate(nodes)
                 if re.match(r"FileScan parquet \[url#\d+,url_hash64#\d+L", n)]

@@ -148,7 +148,7 @@ def test_maintain_is_semantically_invisible(spark, tmp_path):
     tdir = os.path.join(str(tmp_path / "kept"), FRONTIER)
     manis = [f for f in os.listdir(tdir) if f.startswith("mani-")]
     assert len(manis) <= 4  # keep_manifests=3 + current
-    # the bloom is in-memory state: neither rounds nor maintenance write it
+    # neither rounds nor maintenance write a blob
     assert not os.path.exists(os.path.join(str(tmp_path / "kept"), "blobs"))
     # no orphan part dirs: everything on disk is referenced by some
     # RETAINED manifest (retained manifests must stay restorable)
@@ -477,3 +477,19 @@ def test_compact_keeps_partition_spec_hidden_and_prunable(spark, tmp_path):
     assert pruned_on("host_b8") and not pruned_on("host_b4")
     got = sorted(r["seq"] for r in store.prune_read(t, "h3").collect())
     assert got == [i for i in range(150) if i % 10 == 3]
+
+
+def test_read_empty_manifest_raises_naming_table(spark, tmp_path):
+    """``set_partition_spec`` on a new table commits a manifest with no
+    parts: the table exists, but every scan of it raises the same
+    FileNotFoundError as a table with no manifest, naming the table."""
+    store = TableStore(spark, str(tmp_path / "empty_spec"))
+    store.set_partition_spec("t", "host", 4)
+    assert store.exists("t") and store.parts("t") == []
+    for scan in (
+        lambda: store.read("t"),
+        lambda: store.read_parts("t", 0),
+        lambda: store.read_parts_range("t", 0, 1),
+    ):
+        with pytest.raises(FileNotFoundError, match="'t'"):
+            scan()

@@ -117,22 +117,25 @@ def test_seen_anti_join_bloom_property(spark):
 
 
 def test_seen_anti_join_forged_hash_raises(spark):
-    """The bloom confirm finds hits by url_hash64 alone, so a row whose hash
-    is not xxhash64(url) would silently escape it: a forged candidate, or a
-    forged seen row that the probe hits, fails the job instead."""
+    """The confirm finds hits by url_hash64 alone, with or without a bloom
+    prefilter, so a row whose hash is not xxhash64(url) would silently
+    escape it: a forged candidate, or a forged seen row that the probe
+    hits, fails the job instead."""
     urls = [f"https://h{i}.example.com/p{i}" for i in range(50)]
     good = spark.createDataFrame([(u,) for u in urls], "url string").withColumn(
         "url_hash64", F.xxhash64("url"))
     seen = good.filter(F.col("url").isin(urls[:20]))
     bloom = build_bloom(seen, expected_items=64)
-    assert seen_anti_join(good, seen, bloom).count() == 30
+    for b in (bloom, None):
+        assert seen_anti_join(good, seen, b).count() == 30
 
     forged_cand = good.withColumn(
         "url_hash64",
         F.when(F.col("url") == urls[40], F.col("url_hash64") + 1).otherwise(F.col("url_hash64")),
     )
-    with pytest.raises(Exception, match="xxhash64"):
-        seen_anti_join(forged_cand, seen, bloom).collect()
+    for b in (bloom, None):
+        with pytest.raises(Exception, match="xxhash64"):
+            seen_anti_join(forged_cand, seen, b).collect()
 
     # a seen row carrying urls[45]'s hash under another url: the valid
     # candidate urls[45] probes positive and the forged row becomes a hit
@@ -140,8 +143,9 @@ def test_seen_anti_join_forged_hash_raises(spark):
         [("https://forged.example.com/x",)], "url string"
     ).withColumn("url_hash64", F.xxhash64(F.lit(urls[45]))))
     forged_bloom = build_bloom(forged_seen, expected_items=64)
-    with pytest.raises(Exception, match="xxhash64"):
-        seen_anti_join(good, forged_seen, forged_bloom).collect()
+    for b in (forged_bloom, None):
+        with pytest.raises(Exception, match="xxhash64"):
+            seen_anti_join(good, forged_seen, b).collect()
 
 
 # -------------------------------------------------------------------- robots
