@@ -12,14 +12,21 @@ sort:
 1. range-partition on the (total) order key — order-CONSISTENT partitioning:
    every row in partition i sorts before every row in partition i+1;
 2. sort within partitions (parallel, partition-local);
-3. one tiny counting pass -> per-partition sizes -> driver prefix sum;
-4. map-side add of the partition's offset (Arrow-batched, no shuffle).
+3. per-partition sizes from a JVM partial aggregate on
+   ``spark_partition_id()`` (its exchange carries at most one row per
+   partition) -> driver prefix sum;
+4. one JVM projection adds the partition's offset to the row's index in
+   its partition (the low 33 bits of ``monotonically_increasing_id()``):
+   no shuffle, no Python worker.
 
 Because the order key is total (unique per row), the final seq depends ONLY
 on the global order, not on where partition boundaries fall — so the output
 is byte-identical at any parallelism level (the two-cluster-size criterion).
-The partitioned layout is persisted between the counting pass and the
-attach pass so both jobs see the same physical partitions.
+The partitioned layout is persisted between the size pass and the attach
+projection so both jobs see the same physical partitions.
+
+``attach_global_cumsum`` keeps the Arrow-batched shape: a running sum of a
+weight column needs a window, not a row index.
 """
 
 from __future__ import annotations
@@ -49,47 +56,28 @@ def attach_global_seq(
     """
     if seq_col in df.columns:
         raise ValueError(f"column {seq_col!r} already exists")
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     cols = [F.col(c) for c in order]
     d = df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
     d = d.persist()
 
-    def _count(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        c = 0
-        for pdf in batches:
-            c += len(pdf)
-        yield pd.DataFrame({"pid": [pid], "n": [c]})
-
-    sizes = d.mapInPandas(_count, schema="pid int, n long").collect()
-    offsets: dict[int, int] = {}
+    pid = F.spark_partition_id()
+    sizes = d.groupBy(pid.alias("pid")).count().collect()
+    offsets = []
     acc = int(start)
     for row in sorted(sizes, key=lambda r: r.pid):
-        offsets[row.pid] = acc
-        acc += row.n
+        offsets += [F.lit(row.pid), F.lit(acc).cast("long")]
+        acc += row["count"]
     total = acc - int(start)
-    bc = spark.sparkContext.broadcast(offsets)
 
-    # fresh StructType: StructType.add mutates in place and DataFrame.schema
-    # is cached, so building on d.schema directly would corrupt d's schema
-    out_schema = StructType(list(d.schema.fields) + [StructField(seq_col, LongType())])
-
-    def _attach(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        off = bc.value.get(pid, 0)
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[seq_col] = np.arange(off + 1, off + 1 + len(pdf), dtype=np.int64)
-            off += len(pdf)
-            yield pdf
-
-    out = d.mapInPandas(_attach, schema=out_schema).select(*df.columns, seq_col)
-    # stash the exact row count (already paid for by the counting pass) so
+    # an empty partition has no size row and no offset; it has no rows to
+    # look one up either
+    off = F.create_map(*offsets) if offsets else F.lit(None).cast("map<int,bigint>")
+    # monotonically_increasing_id() = (pid << 33) + the row's index in its
+    # partition, counted in the persisted (sorted) partition order
+    idx = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
+    out = d.select(*df.columns, (off[pid] + idx + 1).alias(seq_col))
+    # stash the exact row count (already paid for by the size pass) so
     # callers don't run a separate .count() action
     out._attached_seq_total = total  # type: ignore[attr-defined]
     return out, lambda: d.unpersist()

@@ -281,18 +281,10 @@ class TableStore:
             F.col(spec["col"]) == F.lit(value)
         )
 
-    def read_parts(self, table: str, round_no: int) -> DataFrame:
-        """Scan only the parts tagged with ``round_no`` — manifest-level
-        partition pruning: O(that round's data), e.g. one round's frontier
-        append."""
-        parts = [p for p in self.parts(table) if p.get("round") == round_no]
-        if not parts:
-            return self.read(table).limit(0)
-        return self._scan(table, parts)
-
     def read_parts_range(self, table: str, lo_round: int, hi_round: int) -> DataFrame:
-        """Scan the parts tagged with any round in [lo_round, hi_round].
-        Same manifest-level pruning as ``read_parts``."""
+        """Scan only the parts tagged with a round in [lo_round, hi_round] —
+        manifest-level partition pruning: O(those rounds' data), e.g. one
+        round's frontier append with ``lo_round == hi_round``."""
         parts = [
             p for p in self.parts(table)
             if p.get("round") is not None and lo_round <= p["round"] <= hi_round
@@ -362,7 +354,7 @@ class TableStore:
         """Bin-pack small parts into ~``target_bytes`` parts (Iceberg
         ``rewrite_data_files`` binpack). Parts already >= target and parts
         whose round tag is in ``protect_rounds`` (rounds that may still be
-        re-run/pruned by ``replace_round``/``read_parts``) are untouched.
+        re-run/pruned by ``replace_round``/``read_parts_range``) are untouched.
         A merged part gets ``round=None``. On a table with a partition
         spec, a merged part is written and recorded under the CURRENT spec
         (its inputs may span spec evolutions), so it stays prunable by

@@ -235,8 +235,8 @@ def test_round_write_volume_independent_of_round(spark, tmp_path):
 
     # the appended parts hold exactly the round's rows (O(round) volume)
     for rnd, stats in ((0, stats0), (1, stats1)):
-        assert eng.store.read_parts("frontier", rnd).count() == stats["new_links"]
-        assert eng.store.read_parts("fetched", rnd).count() == stats["emitted"]
+        assert eng.store.read_parts_range("frontier", rnd, rnd).count() == stats["new_links"]
+        assert eng.store.read_parts_range("fetched", rnd, rnd).count() == stats["emitted"]
 
 
 def test_write_volume_flat_over_many_rounds(spark, tmp_path):
@@ -269,8 +269,8 @@ def test_write_volume_flat_over_many_rounds(spark, tmp_path):
         docs = docs_df(spark, n=N_DOCS, seed=500 + rnd)
         stats.append(eng.run_round(rnd, docs=docs))
         # every round's parts hold exactly that round's rows — O(round)
-        assert eng.store.read_parts("frontier", rnd).count() == stats[-1]["new_links"]
-        assert eng.store.read_parts("fetched", rnd).count() == stats[-1]["emitted"]
+        assert eng.store.read_parts_range("frontier", rnd, rnd).count() == stats[-1]["new_links"]
+        assert eng.store.read_parts_range("fetched", rnd, rnd).count() == stats[-1]["emitted"]
         # write-BYTE independence of round number: bytes appended this round
         # per row written must not trend up as the table grows (measured
         # between maintenance runs; compaction rewrites are off-path)
@@ -382,6 +382,13 @@ def test_engine_round_plan_is_o_round(spark, tmp_path):
     assert stats["new_links"] > 0 and len(plans) == 1
     nodes = _plan_nodes(plans[0])
     assert "_might_contain" not in plans[0]
+    # the global seq runs in the JVM: the plan's only Python stage is the
+    # canonicalizer
+    assert "MapInPandas" not in plans[0]
+    python = [n for _, n in nodes if re.match(r"\w*(Python|Pandas|Arrow)\w* ", n)]
+    assert python, plans[0]
+    for n in python:
+        assert set(re.findall(r"(\w+)\(", n)) == {"_canonicalize_url_udf"}, n
 
     frontier = [i for i, (_, n) in enumerate(nodes)
                 if re.match(r"FileScan parquet \[url#\d+,url_hash64#\d+L", n)]

@@ -437,7 +437,7 @@ def test_partition_spec_survives_unrelated_commits(spark, tmp_path):
 def test_compact_keeps_partition_spec_hidden_and_prunable(spark, tmp_path):
     """compact() across a spec evolution (bucket(host, 4), then
     bucket(host, 8)): no physical bucket column reaches read(),
-    read_parts() or read_at(); each merged part is written and recorded
+    read_parts_range() or read_at(); each merged part is written and recorded
     under the table's current spec, so prune_read still prunes it; the
     rows never change."""
     store = TableStore(spark, str(tmp_path / "specs4"))
@@ -455,7 +455,7 @@ def test_compact_keeps_partition_spec_hidden_and_prunable(spark, tmp_path):
     store.set_partition_spec(t, "host", 4)
     store.append(t, rows(0), round_no=1)
     store.append(t, rows(50), round_no=2)
-    assert store.read_parts(t, 1).columns == ["host", "seq"]
+    assert store.read_parts_range(t, 1, 1).columns == ["host", "seq"]
     assert store.read_parts_range(t, 1, 2).columns == ["host", "seq"]
     mani_b4 = store.current_snapshot(t)
 
@@ -488,7 +488,7 @@ def test_read_empty_manifest_raises_naming_table(spark, tmp_path):
     assert store.exists("t") and store.parts("t") == []
     for scan in (
         lambda: store.read("t"),
-        lambda: store.read_parts("t", 0),
+        lambda: store.read_parts_range("t", 0, 0),
         lambda: store.read_parts_range("t", 0, 1),
     ):
         with pytest.raises(FileNotFoundError, match="'t'"):

@@ -4,6 +4,7 @@ robots gate, link extraction span invariant, J4/J5 ordered joins, A1 aggs."""
 from __future__ import annotations
 
 import math
+import sys
 
 import numpy as np
 import pandas as pd
@@ -333,7 +334,10 @@ def test_first_occurrence_dedup_edge_shapes(spark):
 
 def test_attach_global_seq_exact_and_distributed(spark):
     """attach_global_seq == global row_number rank, at any partition count,
-    with NO single-task global sort in the plan (round-1 scale-killer #2)."""
+    with NO single-task global sort in the plan (round-1 scale-killer #2)
+    and no Python worker: sizes and offsets are JVM expressions. Also exact
+    on an empty input and when range partitions outnumber the rows (empty
+    partitions get no offset)."""
     import pandas as pd
     from delphi_crawler_spark.operators.ordering import attach_global_seq
 
@@ -342,21 +346,60 @@ def test_attach_global_seq_exact_and_distributed(spark):
         "b": list(range(500)),
     })
     df = spark.createDataFrame(pdf)
-    expected = sorted(
-        ((r.a, r.b) for r in df.collect()), key=lambda t: (t[0], t[1])
-    )
-    for parts in (2, 7):
+    small = spark.createDataFrame([(2, 0), (1, 1), (3, 2)], "a long, b long")
+    cases = [
+        (df.repartition(2), None, 100),
+        (df.repartition(7), None, 100),
+        (df.limit(0), None, 100),
+        (small, 8, 40),
+    ]
+    for inp, n_parts, start in cases:
+        expected = sorted((r.a, r.b) for r in inp.collect())
         out, release = attach_global_seq(
-            df.repartition(parts), order=["a", "b"], start=100
+            inp, order=["a", "b"], start=start, num_partitions=n_parts
         )
         got = {(r.a, r.b): r.seq for r in out.collect()}
-        assert out._attached_seq_total == 500
-        for rank, key in enumerate(expected, start=101):
-            assert got[key] == rank
+        assert out._attached_seq_total == len(expected)
+        assert got == {key: rank for rank, key in enumerate(expected, start=start + 1)}
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "SinglePartition" not in plan
         assert "Window" not in plan
+        for node in ("MapInPandas", "ArrowEvalPython", "PythonUDF"):
+            assert node not in plan, plan
         release()
+
+
+@pytest.mark.skipif(
+    sys.version_info >= (3, 13),
+    reason="CPython 3.13+ zipimporter reads its directory lazily",
+)
+def test_reused_python_worker_skips_zip_directory_reread(spark):
+    """A reused Python worker that has imported the package (as every
+    worker unpickling an engine UDF does) no longer re-reads the
+    pyspark.zip central directory on ``importlib.invalidate_caches()``,
+    which PySpark calls before every task."""
+    from delphi_crawler_spark.functions.canonicalize import canonicalize_url_py
+
+    sc = spark.sparkContext
+    # task 1: unpickling the function imports the package in the worker
+    assert sc.parallelize(["HTTP://A.example/x"], 1).map(canonicalize_url_py).count() == 1
+
+    def probe(_):
+        import importlib
+        import os
+        import sys
+        import zipimport
+
+        canonicalize_url_py(None)  # unpickling it imports the package here
+        entry = next(p for p in sys.path if p.endswith("pyspark.zip"))
+        imp = sys.path_importer_cache[entry]
+        files = imp._files
+        importlib.invalidate_caches()
+        yield ("SPARK_REUSE_WORKER" in os.environ,
+               isinstance(imp, zipimport.zipimporter), imp._files is files)
+
+    # task 2: the worker's cached pyspark.zip importer keeps its directory
+    assert sc.parallelize([0], 1).mapPartitions(probe).collect() == [(True, True, True)]
 
 
 def test_no_unpartitioned_window_in_plans():
@@ -384,7 +427,7 @@ def test_tablestore_parts_semantics(spark, tmp_path):
     st.append("t", df2, round_no=7)
     assert len(st.parts("t")) == 2
     assert sorted((r.k, r.v) for r in st.read("t").collect()) == [(1, "a"), (2, "b"), (3, "c")]
-    assert [r.k for r in st.read_parts("t", 7).collect()] == [3]
+    assert [r.k for r in st.read_parts_range("t", 7, 7).collect()] == [3]
 
     # replace_round: only round 7's part is swapped
     df2b = spark.createDataFrame(pd.DataFrame({"k": [30, 31], "v": ["c2", "c3"]}))
