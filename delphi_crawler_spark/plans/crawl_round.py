@@ -27,10 +27,11 @@ resumes exactly (reference restart semantics, IndexProcessing.scala:36-41,
 upgraded from lossy to exact). Bootstrap has the same commit point: its
 round -1 checkpoint, so a bootstrap killed before it is redone in full.
 
-The frontier is partitioned ``bucket(16, host)`` as a hidden Iceberg-style
-partition spec: bootstrap declares it once in the table's manifest and the
-store lays out every frontier write and compaction under it. The engine
-writes and reads plain ``FRONTIER_COLS`` frames and never sees the layout.
+The frontier is written as plain parts, one flat parquet file per write
+task: no engine read prunes by host (the pending set, the seen confirm and
+compaction all scan it whole), so a ``bucket(n, host)`` spec would only
+multiply its files. Stores that recorded such a spec keep it: the store
+carries it forward, and reads hide its bucket column.
 
 Scale invariants (100 TB / 10^10 URLs) — each was a round-1 scale-killer,
 now structural:
@@ -96,12 +97,6 @@ FRONTIER_COLS = [
     "url", "url_hash", "url_hash64", "host", "host_rev",
     "priority", "discovery_ts", "seq", "round",
 ]
-# the frontier's hidden partition spec, bucket(FRONTIER_HOST_BUCKETS, host):
-# a host's URLs land in one bucket directory per part, so per-host scans
-# (``TableStore.prune_read``) prune to 1/N of the data and hot-host parts
-# stay isolated from the long tail. Declared once at bootstrap; every
-# frontier write and compaction follows it inside the store.
-FRONTIER_HOST_BUCKETS = 16
 # the checkpoint key holding each rolled-back table's manifest id
 SNAP_KEYS = {FRONTIER: "frontier_snap", FETCHED: "fetched_snap"}
 
@@ -174,27 +169,28 @@ class CrawlEngine:
     # ------------------------------------------------------------ bootstrap
     def bootstrap(self, seeds: DataFrame) -> None:
         """Seed the frontier: canonicalize -> robots -> F1 dedup, written
-        under the frontier's ``bucket(FRONTIER_HOST_BUCKETS, host)`` spec.
-        Its commit point is the round -1 checkpoint: skipped once that
-        exists (resume path); a bootstrap killed before it rewrites the
-        frontier snapshot from the seeds. Also creates/migrates the
-        declared feature-schema registry (S10, reference index bootstrap +
-        version check)."""
+        as a plain snapshot (no partition spec: no engine read prunes the
+        frontier by host). Its commit point is the round -1 checkpoint:
+        skipped once that exists (resume path); a bootstrap killed before
+        it rewrites the frontier snapshot from the seeds. Also creates/
+        migrates the declared feature-schema registry (S10, reference index
+        bootstrap + version check)."""
         from delphi_crawler_spark.storage.schema_registry import migrate_if_needed
 
         migrate_if_needed(self.store)
         if self.store.last_checkpoint() is not None:
             return
-        self.store.set_partition_spec(FRONTIER, "host", FRONTIER_HOST_BUCKETS)
         cand = complete_url_keys(candidate_urls(seeds, self.robots, ["seq"]))
+        # the global monotonic sequence continues from the seeds' max seq,
+        # observed on the snapshot write itself, not by reading it back
+        seq_obs = Observation()
         frontier = cand.select(
             "url", "url_hash", "url_hash64", "host", "host_rev",
             "priority", "discovery_ts", "seq",
             F.lit(-1).alias("round"),
-        )
+        ).observe(seq_obs, F.max("seq").alias("max_seq"))
         snap = self.store.write_snapshot(FRONTIER, frontier)
-        # the global monotonic sequence continues from the seeds' max seq
-        max_seq = self.store.read(FRONTIER).agg(F.max("seq")).collect()[0][0]
+        max_seq = seq_obs.get["max_seq"]
         # round -1 checkpoint anchors exact resume of round 0
         self.store.checkpoint(-1, {
             "emitted_total": 0,

@@ -366,18 +366,18 @@ class TableStore:
         times over the table's lifetime — bounded, unlike read-everything
         compaction. Run it every K rounds to keep the part count O(1)."""
         parts = self.parts(table)
-        small = [
-            p for p in parts
-            if p.get("round") not in protect_rounds
-            and p.get("bytes", self._dir_bytes(table, p["path"])) < target_bytes
+        # (part, bytes): a part's directory is walked only if no size is recorded
+        sized = [
+            (p, p["bytes"] if "bytes" in p else self._dir_bytes(table, p["path"]))
+            for p in parts if p.get("round") not in protect_rounds
         ]
+        small = [(p, b) for p, b in sized if b < target_bytes]
         if len(small) < 2:
             return None
         groups: list[list[dict]] = []
         cur: list[dict] = []
         cur_b = 0
-        for p in small:
-            b = p.get("bytes") or self._dir_bytes(table, p["path"])
+        for p, b in small:
             if cur and cur_b + b > target_bytes:
                 groups.append(cur)
                 cur, cur_b = [], 0
